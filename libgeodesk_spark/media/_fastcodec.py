@@ -12,11 +12,14 @@ do bit-for-bit (asserted by a golden self-test at load; on ANY doubt the
 engine silently runs pure Python, same outputs, slower).
 
 Build: ``cc -O2 -shared -fPIC -lz`` into a content-hash-named .so under
-``$SPARK_GRAFT_FASTCODEC_DIR`` (default: the system temp dir) at first
-import, atomically (os.replace) so concurrent Python workers race
-safely; later imports dlopen the cached artifact. Set
-``LIBGEODESK_NO_FASTCODEC=1`` to force the pure path (used by tests to
-prove the two paths agree).
+``$SPARK_GRAFT_FASTCODEC_DIR`` (default: a per-user 0700 directory in the
+system temp dir) at first import, atomically (os.replace) so concurrent
+Python workers race safely; later imports dlopen the cached artifact.
+A cached .so is loaded only if the effective uid owns it and neither
+group nor other can write it (checked on the opened file, so it cannot
+be swapped between check and load); anything else runs the pure path.
+Set ``LIBGEODESK_NO_FASTCODEC=1`` to force the pure path (used by tests
+to prove the two paths agree).
 """
 
 from __future__ import annotations
@@ -24,6 +27,8 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import shutil
+import stat
 import subprocess
 import tempfile
 
@@ -389,30 +394,61 @@ int reencode_pipeline(const uint8_t *pix, uint32_t w, uint32_t h, int fmt,
 _ENV_OFF = "LIBGEODESK_NO_FASTCODEC"
 
 
+def _cache_dir() -> str:
+    """``$SPARK_GRAFT_FASTCODEC_DIR``, else a per-user 0700 directory
+    under the temp dir; a default directory another user owns is
+    refused (PermissionError: the caller falls back to the pure path)."""
+    d = os.environ.get("SPARK_GRAFT_FASTCODEC_DIR")
+    if d:
+        return d
+    d = os.path.join(tempfile.gettempdir(),
+                     f"libgeodesk_fastcodec-{os.geteuid()}")
+    os.makedirs(d, mode=0o700, exist_ok=True)
+    st = os.lstat(d)
+    if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.geteuid():
+        raise PermissionError(f"{d} is not a directory owned by this user")
+    return d
+
+
 def _build_so() -> str:
     tag = hashlib.sha256(C_SOURCE.encode()).hexdigest()[:16]
-    cachedir = (os.environ.get("SPARK_GRAFT_FASTCODEC_DIR")
-                or tempfile.gettempdir())
+    cachedir = _cache_dir()
     so = os.path.join(cachedir, f"libgeodesk_fastcodec_{tag}.so")
-    if os.path.exists(so):
+    if os.path.lexists(so):
         return so
-    # pid-suffixed source too: a shared source path could be truncated
-    # by one racing worker while another's compiler is mid-read
-    src = os.path.join(cachedir, f"libgeodesk_fastcodec_{tag}.{os.getpid()}.c")
-    tmp_so = f"{so}.tmp{os.getpid()}"
-    with open(src, "w") as f:
-        f.write(C_SOURCE)
-    cc = os.environ.get("CC", "cc")
+    # private build dir: no other process can race or pre-plant the
+    # source or the half-written .so
+    build = tempfile.mkdtemp(prefix="libgeodesk_fastcodec_build_",
+                             dir=cachedir)
     try:
+        src = os.path.join(build, "fastcodec.c")
+        tmp_so = os.path.join(build, "fastcodec.so")
+        with open(src, "w") as f:
+            f.write(C_SOURCE)
+        cc = os.environ.get("CC", "cc")
         subprocess.run([cc, "-O2", "-shared", "-fPIC", "-o", tmp_so, src,
                         "-lz"], check=True, capture_output=True, timeout=120)
+        os.chmod(tmp_so, 0o755)                  # whatever the umask
         os.replace(tmp_so, so)                   # atomic vs racing workers
     finally:
-        try:
-            os.unlink(src)
-        except OSError:
-            pass
+        shutil.rmtree(build, ignore_errors=True)
     return so
+
+
+def _open_trusted(so: str) -> ctypes.CDLL:
+    """dlopen ``so`` only if the effective uid owns it and neither group
+    nor other can write it. The check runs on the opened descriptor and
+    the load goes through that descriptor, so the file cannot be swapped
+    in between; symlinks are refused."""
+    fd = os.open(so, os.O_RDONLY | os.O_NOFOLLOW)
+    try:
+        st = os.fstat(fd)
+        if st.st_uid != os.geteuid() or st.st_mode & 0o022:
+            raise PermissionError(f"refusing {so}: owner {st.st_uid}, "
+                                  f"mode {stat.S_IMODE(st.st_mode):o}")
+        return ctypes.CDLL(f"/proc/self/fd/{fd}")
+    finally:
+        os.close(fd)
 
 
 def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
@@ -473,7 +509,7 @@ def load() -> ctypes.CDLL | None:
             _lib = False
         else:
             try:
-                lib = _bind(ctypes.CDLL(_build_so()))
+                lib = _bind(_open_trusted(_build_so()))
                 _lib = lib if _self_test(lib) else False
             except Exception:
                 _lib = False

@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from libgeodesk_spark.session import local_frame
+
 QUANT = 1000
 
 
@@ -265,7 +267,7 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int,
         for lid in np.argsort(d)[:nprobe]:
             probe_rows.append((r["qid"], int(lid)))
     spark = emb.sparkSession
-    probes = spark.createDataFrame(probe_rows, "qid long, list_id int")
+    probes = local_frame(spark, probe_rows, "qid long, list_id int")
     qdf = q.join(F.broadcast(probes), "qid")
 
     cand = tagged.join(F.broadcast(qdf), "list_id") \
@@ -326,10 +328,9 @@ def lsh_plane_matrix(planes: int, dim: int, seed_off: int = 0) -> np.ndarray:
 #: dims (1024 terms) already blows janino's 64 KB method limit ("Code
 #: grows beyond 64 KB" → whole-stage codegen falls back to the
 #: interpreted path), and HotSpot refuses to JIT huge generated methods
-#: well before that (spatial_join.py JVM_PIP_MAX_EDGES). 512 keeps the
-#: 64-d gate corpus (≤8 planes) on the JVM expression; 512-768-dim
-#: production embeddings take the one-Arrow-pass numpy matmul (the
-#: ivf_assign shape).
+#: well before that. 512 keeps the 64-d gate corpus (≤8 planes) on the
+#: JVM expression; 512-768-dim production embeddings take the
+#: one-Arrow-pass numpy matmul (the ivf_assign shape).
 LSH_JVM_MAX_TERMS = 512
 
 
@@ -508,7 +509,7 @@ def lsh_bucket_topk(emb: DataFrame, query_ids: list[int], k: int, dim: int = 64,
             qbucket = int(sum(1 << p for p in range(planes) if dots[p] > 0))
             for m in _probe_sequence(dots, planes, n_probes):
                 probe_rows.append((r["qid"], qbucket ^ m))
-        probes = spark.createDataFrame(probe_rows, "qid long, bucket long")
+        probes = local_frame(spark, probe_rows, "qid long, bucket long")
         cand_tables.append(
             tagged.join(F.broadcast(probes), "bucket")
             .select("qid", id_col))
@@ -844,7 +845,7 @@ def ivfpq_topk(emb: DataFrame, query_ids: list[int], k: int,
             sub = v[s * dsub:(s + 1) * dsub]
             t[s] = ((books[s] - sub) ** 2).sum(axis=1)
         tables[qid] = t
-    probes = spark.createDataFrame(probe_rows, "qid long, list_id int")
+    probes = local_frame(spark, probe_rows, "qid long, list_id int")
     # each code row is scored ONLY against the queries probing its list
     pc = codes.join(F.broadcast(probes), "list_id")
     bc = spark.sparkContext.broadcast(tables)

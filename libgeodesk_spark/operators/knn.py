@@ -12,8 +12,10 @@ cell (the ring-expansion guarantee).
 
 Distances are **exact int64 squared Mercator units** (point candidates),
 so neighbor sets are bit-reproducible and tie-broken deterministically by
-id. Cell-ring candidate pruning happens via an ``IN`` predicate on
-``cell_id`` — partition-prunable on a cell-partitioned table.
+id. Cell-ring candidates are selected by an ``IN`` predicate on
+``cell_id``. The GOL layout (sources.writer) partitions by ``part_cell``
+(zoom 4), not by ``cell_id``, so that predicate prunes no directories:
+it skips parquet row groups through their ``cell_id`` min/max stats.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from libgeodesk_spark.mercator import (
     row_from_y,
     units_from_meters,
 )
+from libgeodesk_spark.session import local_frame
 
 
 def _ring_cells(qcol: int, qrow: int, r: int, zoom: int) -> list[int]:
@@ -90,10 +93,12 @@ def knn(points: DataFrame, qx: int, qy: int, k: int,
     """Exact k nearest points to (qx,qy); deterministic tie-break by id.
 
     Iteratively expands cell rings; per iteration one Spark job over only
-    the candidate cells (``cell_id IN ...`` — prunable), collecting at most
-    k rows to the driver for the stop test. Returns a DataFrame
+    the candidate cells (``cell_id IN ...``, row-group-skipping), collecting
+    at most k rows to the driver for the stop test. Returns a DataFrame
     (id, x, y, sq_dist) of exactly min(k, candidates) rows, built from the
-    final collected top-k so downstream use is a local broadcastable frame.
+    final collected top-k through Arrow: a ``LocalTableScan``, so
+    collecting or broadcasting the result starts no Python task. The id
+    column must hold strings.
     """
     spark = points.sparkSession
     qcol = int(col_from_x(qx, zoom))
@@ -133,8 +138,8 @@ def knn(points: DataFrame, qx: int, qy: int, k: int,
             f"knn did not converge within max_rings={max_rings}; "
             f"raise max_rings or start at a coarser zoom")
 
-    return spark.createDataFrame(best, schema=f"{id_col} string, {x_col} long, "
-                                              f"{y_col} long, sq_dist long")
+    return local_frame(spark, best, f"{id_col} string, {x_col} long, "
+                                    f"{y_col} long, sq_dist long")
 
 
 #: above this many queries, knn_batch delegates to the knn_join grid
@@ -154,7 +159,8 @@ def _knn_batch_via_join(points: DataFrame, queries: list[tuple], k: int,
     coordinates. Identical output contract to the ring protocol
     (pytest-asserted)."""
     spark = points.sparkSession
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [("\x00q:" + str(qid), int(qx), int(qy)) for qid, qx, qy in queries],
         f"_kj_id string, {x_col} long, {y_col} long")
     cand = points.select(F.col(id_col).cast("string").alias("_kj_id"),
@@ -216,8 +222,8 @@ def knn_batch(points: DataFrame, queries: list[tuple], k: int,
     out_frames = []
     r = start_r
     while pending and r <= max_rings:
-        qdf = spark.createDataFrame(
-            [(qid, qx, qy) for qid, (qx, qy) in pending.items()],
+        qdf = local_frame(
+            spark, [(qid, qx, qy) for qid, (qx, qy) in pending.items()],
             "qid string, qx long, qy long")
         qcol = F.shiftright(F.col("qx") + F.lit(1 << 31), shift)
         qrow = F.shiftright(F.lit(0x7FFFFFFF) - F.col("qy"), shift)

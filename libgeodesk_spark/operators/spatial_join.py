@@ -134,54 +134,6 @@ def bbox_filter(df: DataFrame, min_x: int, min_y: int, max_x: int, max_y: int,
 #: million-vertex polygon should be split (or covered coarser) instead.
 PER_ZONE_EDGE_LIMIT = 200_000
 
-#: total zone-set edge budget for compiling the locate test into Catalyst
-#: Column arithmetic: per-edge constants fold into the generated code, so
-#: the boundary band needs NO Python at all and the whole join is one
-#: scan -> broadcast join -> codegen filter. Measured caveat (why this is
-#: NOT the default): even 30 edges generate a method big enough that
-#: HotSpot declines to JIT it (whole-stage codegen inlines the whole
-#: conjunction into the join consume path), and the interpreted generated
-#: code ran 4x slower than the two-branch Arrow path; with
-#: spark.sql.codegen.wholeStage=false it recovers to ~1.8x slower. Kept
-#: as an opt-in for deployments that must avoid Python workers entirely.
-JVM_PIP_MAX_EDGES = 512
-
-
-def _pip_jvm_expr(zone: PreparedZone, px, py, min_loc: int):
-    """The locate kernel (kernel.locate_points) compiled to a Column
-    predicate for ONE zone — bit-identical semantics: half-open
-    [low_y, high_y) crossing rule, collinear-in-bbox boundary test,
-    degenerate-edge point test. ``px``/``py`` must be long Columns.
-    Products fit int64 exactly where they are used (masked elsewhere;
-    long arithmetic wraps silently under a false mask, never throws)."""
-    boundary = F.lit(False)
-    crossings = F.lit(0)
-    for ax, ay, bx, by in zone.edges.tolist():
-        exl, exh = (ax, bx) if ax <= bx else (bx, ax)
-        eyl, eyh = (ay, by) if ay <= by else (by, ay)
-        if ax == bx and ay == by:
-            boundary = boundary | ((px == ax) & (py == ay))
-            continue
-        cross0 = (F.lit(bx - ax) * (py - F.lit(ay))
-                  - F.lit(by - ay) * (px - F.lit(ax)))
-        boundary = boundary | ((px >= exl) & (px <= exh)
-                               & (py >= eyl) & (py <= eyh) & (cross0 == 0))
-        if ay == by:
-            continue  # horizontal edges never cross the eastward ray
-        lx, ly, hx, hy = (ax, ay, bx, by) if ay < by else (bx, by, ax, ay)
-        in_y = (py >= ly) & (py < hy)
-        west = px < exl
-        mid = (px >= exl) & (px <= exh)
-        cross_up = (F.lit(hx - lx) * (py - F.lit(ly))
-                    - F.lit(hy - ly) * (px - F.lit(lx)))
-        crossings = crossings + \
-            (in_y & (west | (mid & (cross_up > 0)))).cast("int")
-    odd = (crossings % 2) == 1
-    if min_loc >= kernel.INSIDE:
-        return (~boundary) & odd
-    return boundary | odd
-
-
 #: cap on Σ(boundary cells × edge bytes) duplicated into the fallback's
 #: per-cell edge table; the fallback coarsens covers until it fits
 EDGE_DUP_BUDGET_BYTES = 128 << 20
@@ -237,45 +189,34 @@ def join_zones(points: DataFrame, zones: list[PreparedZone],
                prefilter_bbox: bool = True,
                columns: list[str] | None = None,
                single_pass: bool = False,
-               spread_boundary: bool = False,
-               jvm_pip: bool = False,
                max_broadcast_edges: int = EDGE_BROADCAST_LIMIT,
                intervals=None) -> DataFrame:
     """points × zones point-in-polygon join.
 
-    ``intervals``: optional pre-computed run-length interval table (a
-    pandas DataFrame with cell_row/c0/c1/zone_id/cover — the
-    operators.zoneprep artifact form). When given, the broadcast build
-    side is taken AS-IS and the zones' ``cover`` dicts are never read —
-    the large-catalog path where covers stay executor-side
-    (zoneprep.collect_prepared_light). Requires the broadcast-edges
-    regime (the shuffle-cogroup fallback needs full covers).
-
     Returns ``columns`` (default: all input columns) plus ``zone_id`` — one
     row per (point, zone) membership, exactly matching the reference
-    predicate semantics.
+    predicate semantics. ``columns`` prunes the Arrow transfer — pass the
+    narrow output you need; x/y/cell/cover are retained internally.
 
-    Physical shape: one broadcast hash join on ``cell_id`` (no shuffle of
-    the fact side), then — for zone sets whose total edges fit
-    ``JVM_PIP_MAX_EDGES`` and ``jvm_pip=True`` (OPT-IN: measured ~4×
-    slower than the Arrow kernel under whole-stage codegen, see
-    JVM_PIP_MAX_EDGES note — kept for zero-Python deployments) — a single
-    whole-stage-codegen filter with the locate kernel compiled to Column
-    arithmetic (no Python at all). Otherwise either
+    Physical shape (broadcast regime, total edges ≤
+    ``max_broadcast_edges``): the points join the zones' run-length cover
+    intervals in one broadcast hash join (no shuffle of the fact side).
+    INSIDE-cover rows are accepted in the JVM and never reach Python.
+    BOUNDARY-cover rows pass a ``rebalance`` exchange, so AQE sizes the
+    Arrow ``mapInPandas`` locate stage by boundary-band bytes (one task for
+    a small query, advisory-size tasks with skew splitting at scale)
+    rather than by scan splits; each Python task costs ~0.2-0.3 CPU-s
+    before it reads a row. Streaming input skips the rebalance.
+    ``single_pass=True`` instead runs every candidate row through one
+    ``mapInPandas`` (one consumer of the source, for streaming or
+    expensive derived inputs). Past ``max_broadcast_edges`` the boundary
+    band co-groups with per-cell edge slices instead.
 
-    * ``single_pass=False`` (default): a pure-JVM filter for INSIDE-cover
-      rows unioned with an Arrow ``mapInPandas`` locate over BOUNDARY-cover
-      rows. Two consumers of the joined stream — Spark re-runs the (cheap,
-      scan-local) join per branch but only BOUNDARY rows pay the Python
-      boundary; right for turbo-dominated zone sets over materialized
-      tables (AQE reuses the probe-side exchange when one exists).
-    * ``single_pass=True``: everything flows through one ``mapInPandas``
-      that passes INSIDE rows through untouched and runs the kernel only on
-      the BOUNDARY rows of each batch. One scan total — right when the
-      source is expensive to recompute (derived/pre-shuffled inputs).
-
-    ``columns`` prunes the Arrow transfer — pass the narrow output you
-    need; x/y/cell/cover are retained internally.
+    ``intervals``: optional pre-computed run-length interval table (a
+    pandas or Spark DataFrame with cell_row/c0/c1/zone_id/cover — the
+    operators.zoneprep artifact form). When given, the broadcast build
+    side is taken AS-IS and the zones' ``cover`` dicts are never read
+    (zoneprep.collect_prepared_light). Requires the broadcast regime.
     """
     spark = points.sparkSession
     min_loc = _MIN_LOC[predicate]
@@ -304,8 +245,6 @@ def join_zones(points: DataFrame, zones: list[PreparedZone],
                             intervals[intervals["zone_id"].isin(
                                 {z.zone_id for z in zones
                                  if z.zoom == zm})],
-                            spread_boundary=spread_boundary,
-                            jvm_pip=jvm_pip,
                             max_broadcast_edges=max_broadcast_edges)
                  for zm in zooms]
         out = parts[0]
@@ -399,22 +338,6 @@ def join_zones(points: DataFrame, zones: list[PreparedZone],
         & (F.col("_cc") >= F.col("c0")) & (F.col("_cc") <= F.col("c1")),
         "inner").drop("cell_row", "c0", "c1", "_cc", "_rr")
 
-    if jvm_pip and total_edges <= JVM_PIP_MAX_EDGES and not single_pass:
-        # CODEGEN PATH (small zone sets): the locate kernel compiles to
-        # Column arithmetic, so the ENTIRE join is one scan -> broadcast
-        # hash join -> whole-stage-codegen filter. No Python, no union,
-        # no second scan; scaling tracks the scan.
-        pxl = F.col(x_col).cast("long")
-        pyl = F.col(y_col).cast("long")
-        pip = None
-        for z in zones:
-            cond = _pip_jvm_expr(z, pxl, pyl, min_loc)
-            pip = F.when(F.col("zone_id") == z.zone_id, cond) if pip is None \
-                else pip.when(F.col("zone_id") == z.zone_id, cond)
-        accept = (F.col("cover") == INSIDE) \
-            | ((F.col("cover") == BOUNDARY) & pip.otherwise(F.lit(False)))
-        return cand.filter(accept).select(*final_cols)
-
     edges_bc = spark.sparkContext.broadcast(
         {z.zone_id: z.edges for z in zones})
 
@@ -447,16 +370,9 @@ def join_zones(points: DataFrame, zones: list[PreparedZone],
     turbo = cand.filter(F.col("cover") == INSIDE).select(*final_cols)
     bnd = cand.filter(F.col("cover") == BOUNDARY) \
         .select(*dict.fromkeys(final_cols + [x_col, y_col]))
-    if spread_boundary:
-        # hot-cell skew: a dense cell on a zone boundary concentrates all
-        # kernel work in the task(s) owning that cell's storage partition.
-        # Explicitly scatter boundary rows round-robin before the Arrow
-        # stage. Worth it when the kernel work per row outweighs one extra
-        # shuffle of the (skinny) boundary rows — i.e. very hot cells on
-        # complex zone boundaries on a real cluster; measured locally the
-        # shuffle costs more than the straggler, hence the False default
-        # (opt in for skewed clusters).
-        bnd = bnd.repartition(spark.sparkContext.defaultParallelism * 2)
+    if not points.isStreaming:
+        # size the Python stage by the boundary band, not by scan splits
+        bnd = bnd.hint("rebalance")
     out_schema = turbo.schema
 
     def locate_batches(batches):

@@ -7,8 +7,8 @@ Settings and the reasons they matter at 100 TB scale:
 * ``files.maxPartitionBytes`` lowered to 16 MB (+ 4 MB openCost): the
   engine's hot-cell data layouts cluster dense cells into contiguous
   files; smaller splits spread a hot cell across tasks WITHOUT a shuffle
-  (the cheap half of skew handling — the explicit ``spread_boundary``
-  repartition in join_zones is the expensive half for extreme cases).
+  (the cheap half of skew handling — join_zones' AQE-sized rebalance of
+  the boundary band is the other half).
   Local-scale calibration: a sandbox-sized table must still yield >2
   tasks/core at local[32] or a single straggler split caps scaling (at
   100 TB any split size gives millions of tasks; raise this there).
@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_session(app: str = "libgeodesk_spark", cpus: int | None = None,
@@ -75,3 +75,21 @@ def build_session(app: str = "libgeodesk_spark", cpus: int | None = None,
     s = b.getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     return s
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """``rows`` (tuples in ``schema`` column order, DDL string) as a
+    driver-local frame built through Arrow. Spark plans it as a
+    ``LocalTableScan``, so collecting or broadcasting it starts no Python
+    task; ``createDataFrame(list)`` instead parallelizes pickled rows that
+    a Python worker decodes on every use (~0.2-0.3 CPU-s per task before
+    it reads a row)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
+
+    st = _parse_datatype_string(schema)
+    cols = list(zip(*rows)) or [()] * len(st.fields)
+    return spark.createDataFrame(pa.table(
+        [pa.array(c, to_arrow_type(f.dataType))
+         for c, f in zip(cols, st.fields)], names=st.names), st)

@@ -209,6 +209,54 @@ class TestFastcodecKernel:
             pytest.skip("no C compiler on this host")
         assert codec._fc() is not None
 
+    @staticmethod
+    def _fresh_load(monkeypatch, cachedir):
+        """_fastcodec.load() as a new process would run it, with the
+        kernel cache at ``cachedir`` (None: the per-user default)."""
+        import shutil
+
+        from libgeodesk_spark.media import _fastcodec
+        if shutil.which("cc") is None:
+            pytest.skip("no C compiler on this host")
+        monkeypatch.delenv("LIBGEODESK_NO_FASTCODEC", raising=False)
+        if cachedir is None:
+            monkeypatch.delenv("SPARK_GRAFT_FASTCODEC_DIR", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_GRAFT_FASTCODEC_DIR", str(cachedir))
+        monkeypatch.setattr(_fastcodec, "_lib", None)
+        return _fastcodec.load()
+
+    def test_planted_group_writable_so_is_refused(self, tmp_path,
+                                                  monkeypatch):
+        """A working kernel .so at the cache path that group can write
+        (another user could have planted or rewritten it) must not be
+        dlopened: the engine runs the pure path instead."""
+        import os
+        import shutil
+
+        from libgeodesk_spark.media import _fastcodec
+        good, shared = tmp_path / "good", tmp_path / "shared"
+        good.mkdir()
+        shared.mkdir()
+        os.chmod(shared, 0o755)
+        assert self._fresh_load(monkeypatch, good) is not None
+        so = _fastcodec._build_so()
+        planted = shared / os.path.basename(so)
+        shutil.copy(so, planted)
+        os.chmod(planted, 0o664)
+        assert self._fresh_load(monkeypatch, shared) is None
+        os.chmod(planted, 0o755)        # same file, owner-only writable
+        assert self._fresh_load(monkeypatch, shared) is not None
+
+    def test_default_cache_is_private_per_user(self, tmp_path, monkeypatch):
+        import os
+        import tempfile
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        assert self._fresh_load(monkeypatch, None) is not None
+        d = tmp_path / f"libgeodesk_fastcodec-{os.geteuid()}"
+        assert (d.stat().st_mode & 0o777) == 0o700
+        assert d.stat().st_uid == os.geteuid()
+
     @pytest.mark.parametrize("bpp", [3, 4])
     def test_filtered_png_decode_c_equals_pure(self, bpp):
         """codec.decode routes filtered external PNGs through the C

@@ -180,31 +180,6 @@ class TestShuffleFallback:
             _edge_cells_pdf([z])
 
 
-class TestJvmPipPath:
-    """Opt-in codegen PIP (jvm_pip=True): the locate kernel compiled to
-    Column arithmetic must match the Arrow-kernel path row-for-row on all
-    gate zones and both predicates."""
-
-    def test_jvm_pip_matches_arrow_path(self, spark):
-        import numpy as np
-
-        from libgeodesk_spark.geom.zones import prepare_zone
-        from libgeodesk_spark.operators.spatial_join import join_zones
-        from libgeodesk_spark.sources.points import GATE_ZONES, derived_points
-
-        zones = [prepare_zone(n, [np.array(r) for r in rings])
-                 for n, rings in GATE_ZONES.items()]
-        pts = derived_points(spark, "/root/testdata/sf0.001")
-        for pred in ("within", "intersects", "contains_point"):
-            a = join_zones(pts, zones, predicate=pred, columns=["image_id"],
-                           jvm_pip=True)
-            b = join_zones(pts, zones, predicate=pred, columns=["image_id"],
-                           jvm_pip=False)
-            sa = sorted((r.image_id, r.zone_id) for r in a.collect())
-            sb = sorted((r.image_id, r.zone_id) for r in b.collect())
-            assert sa == sb and len(sa) > 0, pred
-
-
 class TestWithinDistancePairs:
     def test_matches_brute_force(self, spark):
         """Grid band join vs O(N²) numpy on clustered + negative coords."""
