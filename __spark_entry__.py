@@ -137,8 +137,8 @@ def _q_within(zname):
     def q(spark, sf_dir):
         from libgeodesk_spark.operators.spatial_join import join_zones
         return join_zones(_points(spark, sf_dir), [_zone(zname)],
-                          predicate="within", columns=["image_id", "cell_id"],
-                          single_pass=True).select("image_id", "cell_id")
+                          predicate="within", columns=["image_id", "cell_id"]) \
+            .select("image_id", "cell_id")
     return q
 
 
@@ -146,8 +146,8 @@ def _q_intersects(zname):
     def q(spark, sf_dir):
         from libgeodesk_spark.operators.spatial_join import join_zones
         return join_zones(_points(spark, sf_dir), [_zone(zname)],
-                          predicate="intersects", columns=["image_id", "cell_id"],
-                          single_pass=True).select("image_id", "cell_id")
+                          predicate="intersects", columns=["image_id", "cell_id"]) \
+            .select("image_id", "cell_id")
     return q
 
 
@@ -617,8 +617,8 @@ def _q_snapshot_within(spark, sf_dir):
     mnx, mny, mxx, mxy = z.bbox
     df, _plan = tbl.planned_scan(spark, {"x": (mnx, mxx), "y": (mny, mxy)})
     return join_zones(df, [z], predicate="within",
-                      columns=["image_id", "cell_id"],
-                      single_pass=True).select("image_id", "cell_id")
+                      columns=["image_id", "cell_id"]) \
+        .select("image_id", "cell_id")
 
 
 def _q_user_sessions(spark, sf_dir):

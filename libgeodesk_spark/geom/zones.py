@@ -179,8 +179,8 @@ def cover_rle(keys: np.ndarray, vals: np.ndarray):
     col run, cover class). THE canonical encoder: both the driver-built
     broadcast table (spatial_join.zone_intervals_df) and the
     executor-side artifacts (operators/zoneprep) call this, so the
-    intervals= join path can never desynchronize from the default
-    path's representation."""
+    catalog join can never desynchronize from the driver-zone join's
+    representation."""
     out_r, out_c0, out_c1, out_cv = [], [], [], []
     cols = keys >> 20
     rows = keys & 0xFFFFF

@@ -1,4 +1,4 @@
-"""Broadcast prepared-geometry spatial join: the Spark-native analog of the
+"""Prepared-geometry spatial join: the Spark-native analog of the
 reference's prepared filters (within / intersects / contains-point).
 
 Reference execution shape (src/filter/WithinFilter.cpp, §3.2 of SURVEY.md):
@@ -7,28 +7,36 @@ tile scan; per tile ``acceptTile`` turbo-accepts tiles fully inside
 (WithinFilter.cpp:164-171) and rejects tiles fully outside; only boundary
 tiles run per-feature geometry.
 
-Spark-first translation:
+Spark-first translation — one core (:func:`_interval_join`) behind both
+entry points:
 
-* build side: :class:`PreparedZone` per polygon (driver-side, once) →
-  a tiny ``zone_cells`` DataFrame (cell_id, zone_id, cover) broadcast-joined
-  against the points on ``cell_id`` — this is simultaneously the partition
-  pruning (absent cells never match) and the turbo classification;
-* probe side: INSIDE-cover matches accepted with zero geometry work in
-  pure JVM; BOUNDARY-cover matches run the vectorized locate kernel in an
-  Arrow-batched ``mapInPandas`` (no per-row Python).
+* filter: the zones' exact cover as run-length intervals (cell row,
+  column run, zone, cover class — Raster Intervals, SIGMOD 2023),
+  broadcast once and joined against the points on the cell row with a
+  column-range residual. Absent cells never match, so this is also the
+  partition pruning; no shuffle of the fact side.
+* INSIDE-cover matches are accepted in the JVM with zero geometry work;
+  only BOUNDARY-cover matches reach the vectorized locate kernel, in
+  Arrow batches (no per-row Python).
+* refinement follows where the zone edges live: edges on the driver
+  within ``EDGE_BROADCAST_LIMIT`` are ``sc.broadcast`` to a
+  ``mapInPandas``; anything else (a zone catalog on executors, or a
+  driver zone set past the limit) co-groups the boundary band with an
+  edges frame of one row per zone on ``zone_id``, so each zone's edges
+  ship once.
 * a bbox pre-filter (plain column range predicate) is pushed into the
   parquet/Iceberg scan for file/row-group skipping, mirroring the
   reference's bbox test ordering (TileQueryTask.cpp:176-203).
 
-Scale notes (100 TB): the join is broadcast (zone_cells is tiny: #cells ×
-#zones); no shuffle of the fact table at all. Callers should pass skinny
-point frames (ids + x/y/cell) and re-attach heavy payload columns (image
-bytes) by key afterwards, so bytes never cross the Python boundary.
+Callers should pass skinny point frames (ids + x/y/cell) and re-attach
+heavy payload columns (image bytes) by key afterwards, so bytes never
+cross the Python boundary.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Literal
+from functools import partial, reduce
+from typing import Callable, Iterable, Literal
 
 import numpy as np
 import pandas as pd
@@ -38,11 +46,12 @@ from pyspark.sql import types as T
 
 from libgeodesk_spark.geom import kernel
 from libgeodesk_spark.geom.zones import BOUNDARY, INSIDE, PreparedZone
+from libgeodesk_spark.session import local_frame
 
 Predicate = Literal["within", "intersects", "contains_point"]
 
-#: above this many total zone edges the build side is NOT broadcast as one
-#: blob — boundary rows co-group with per-cell edge slices instead
+#: above this many total zone edges a driver zone set is NOT broadcast as
+#: one blob — the boundary band co-groups with one edge row per zone
 #: (~32 B/edge: 2M edges = 64 MB broadcast, a sane executor budget)
 EDGE_BROADCAST_LIMIT = 2_000_000
 
@@ -54,35 +63,13 @@ _MIN_LOC = {"within": kernel.INSIDE, "intersects": kernel.BOUNDARY,
             "contains_point": kernel.BOUNDARY}
 
 
-def zone_cells_df(spark: SparkSession, zones: Iterable[PreparedZone],
-                  covers: list[dict] | None = None) -> DataFrame:
-    """(cover_key, zone_id, cover) — the broadcast build side. cover_key is
-    the pack_colrow key at the zones' cover zoom (all zones must share it).
-    ``covers`` overrides each zone's own cover (coarsened variants)."""
-    frames = []
-    for i, z in enumerate(zones):
-        cov = covers[i] if covers is not None else z.cover
-        keys = np.fromiter(cov.keys(), dtype=np.int64, count=len(cov))
-        vals = np.fromiter(cov.values(), dtype=np.int32, count=len(cov))
-        frames.append(pd.DataFrame({"cover_key": keys, "zone_id": z.zone_id,
-                                    "cover": vals}))
-    pdf = pd.concat(frames, ignore_index=True) if frames else \
-        pd.DataFrame({"cover_key": [], "zone_id": [], "cover": []})
-    schema = T.StructType([
-        T.StructField("cover_key", T.LongType(), False),
-        T.StructField("zone_id", T.StringType(), False),
-        T.StructField("cover", T.IntegerType(), False),
-    ])
-    return spark.createDataFrame(pdf, schema)  # Arrow path — no row pickling
-
-
 def zone_intervals_df(spark: SparkSession,
                       zones: Iterable[PreparedZone]) -> DataFrame:
     """Run-length-encoded cover: one row per (cell row, contiguous col run,
     zone, cover class) — the Raster-Intervals representation (SIGMOD 2023)
     of the same exact cover.
 
-    Why this beats the per-cell table as the broadcast build side: a
+    Why this beats a per-cell table as the broadcast build side: a
     zoom-18 regional cover is ~70k cells/zone and the per-cell broadcast
     build is DRIVER-SERIAL work repeated per query (measured ~2 s of the
     join's Amdahl floor); the interval form is ~1-3 runs per boundary row
@@ -113,13 +100,6 @@ def zone_intervals_df(spark: SparkSession,
     return spark.createDataFrame(pdf, schema)
 
 
-def cover_key_col(x, y, zoom: int):
-    """pack_colrow(col, row) at ``zoom`` as JVM Column arithmetic."""
-    col = F.shiftright(x.cast("long") + F.lit(1 << 31), 32 - zoom)
-    row = F.shiftright(F.lit(0x7FFFFFFF) - y.cast("long"), 32 - zoom)
-    return F.shiftleft(col, 20) + row
-
-
 def bbox_filter(df: DataFrame, min_x: int, min_y: int, max_x: int, max_y: int,
                 x: str = "x", y: str = "y") -> DataFrame:
     """Plain range predicate — pushed down to the scan (P9 bbox window,
@@ -128,279 +108,169 @@ def bbox_filter(df: DataFrame, min_x: int, min_y: int, max_x: int, max_y: int,
                      & (F.col(y) >= min_y) & (F.col(y) <= max_y))
 
 
-#: fallback sanity bound per SINGLE zone: its edges are shipped whole to
-#: each of its boundary cells (PIP parity needs the full ring set — a ray
-#: cast east crosses edges far outside the probe's cell). A single
-#: million-vertex polygon should be split (or covered coarser) instead.
-PER_ZONE_EDGE_LIMIT = 200_000
-
-#: cap on Σ(boundary cells × edge bytes) duplicated into the fallback's
-#: per-cell edge table; the fallback coarsens covers until it fits
-EDGE_DUP_BUDGET_BYTES = 128 << 20
+#: refine(candidate rows, output schema) -> accepted rows of that schema
+Refiner = Callable[[DataFrame, T.StructType], DataFrame]
 
 
-def _edge_cells_pdf(zones: list[PreparedZone],
-                    covers: list[dict] | None = None) -> "pd.DataFrame":
-    """One row per (boundary cover cell, zone) carrying that ZONE's full
-    edge array as int64 bytes — the shuffle-join build side for zone SETS
-    whose combined edges are too big to broadcast whole (the common
-    huge-build-side case: many moderate zones, e.g. every admin polygon).
-    Each executor receives only the zones of the cells it processes."""
-    keys_out, zids, blobs = [], [], []
-    for i, z in enumerate(zones):
-        if len(z.edges) > PER_ZONE_EDGE_LIMIT:
-            raise ValueError(
-                f"zone {z.zone_id} has {len(z.edges)} edges — beyond the "
-                f"shuffle-fallback per-zone bound ({PER_ZONE_EDGE_LIMIT}); "
-                f"split the polygon or prepare it at a coarser cover zoom")
-        blob = z.edges.tobytes()
-        cov = covers[i] if covers is not None else z.cover
-        for key, val in cov.items():
-            if val != BOUNDARY:
-                continue
-            keys_out.append(key)
-            zids.append(z.zone_id)
-            blobs.append(blob)
-    return pd.DataFrame({"cover_key": np.array(keys_out, dtype=np.int64),
-                         "zone_id": zids, "edges_blob": blobs})
+def _interval_join(parts: list[tuple[DataFrame, int, DataFrame, Refiner]],
+                   out_cols: list[str], x_col: str, y_col: str) -> DataFrame:
+    """THE spatial-join core. Each part is (points, cover zoom, interval
+    table, boundary refiner); the union of the parts is the join.
+
+    Per part: tag points with their cell column/row at the zoom, join the
+    broadcast intervals on the row with a column-range residual, accept
+    INSIDE rows in the JVM and hand BOUNDARY rows (with x/y and cover) to
+    the refiner. Streaming input hands every candidate to the refiner
+    instead — one consumer of the source per micro-batch."""
+    final_cols = list(dict.fromkeys(out_cols + ["zone_id"]))
+    need = list(dict.fromkeys(out_cols + [x_col, y_col]))
+    refine_cols = list(dict.fromkeys(final_cols + [x_col, y_col, "cover"]))
+    outs = []
+    for points, zoom, iv, refine in parts:
+        shift = 32 - zoom
+        probe = points.select(
+            *need,
+            F.shiftright(F.col(x_col).cast("long") + F.lit(1 << 31), shift)
+            .alias("_cc"),
+            F.shiftright(F.lit(0x7FFFFFFF) - F.col(y_col).cast("long"),
+                         shift).alias("_rr"))
+        cand = probe.join(
+            F.broadcast(iv),
+            (F.col("_rr") == F.col("cell_row"))
+            & (F.col("_cc") >= F.col("c0")) & (F.col("_cc") <= F.col("c1")),
+            "inner")
+        schema = cand.select(*final_cols).schema
+        if points.isStreaming:
+            outs.append(refine(cand.select(*refine_cols), schema))
+            continue
+        # the class test (= cover) also reads a probe column and zone_id,
+        # so Catalyst neither pushes it into the interval table nor prunes
+        # zone_id from one branch: both branches keep the same build side
+        # and share ONE BroadcastExchange
+        cls = F.col("cover") + (F.col("_cc") - F.col("_cc")) \
+            * F.length("zone_id")
+        inside = cand.filter(cls == INSIDE).select(*final_cols)
+        bnd = cand.filter(cls == BOUNDARY).select(*refine_cols)
+        outs.append(inside.unionByName(refine(bnd, schema)))
+    return reduce(DataFrame.unionByName, outs)
 
 
-def _fit_fallback_covers(zones: list[PreparedZone]) -> tuple[int, list[dict]]:
-    """Coarsen covers (exactly — coarsen_cover) until the fallback's edge
-    duplication Σ(boundary cells × 32 B × edges) fits EDGE_DUP_BUDGET_BYTES.
-    Fine covers multiply boundary-cell counts, and the fallback ships each
-    zone's whole edge blob once per boundary cell — unbounded at zoom 20."""
-    from libgeodesk_spark.geom.zones import coarsen_cover
-    covers = [z.cover for z in zones]
-    k = 0
-    while True:
-        dup = sum(sum(1 for v in cov.values() if v == BOUNDARY) * 32
-                  * len(z.edges) for z, cov in zip(zones, covers))
-        zoom = zones[0].zoom - k
-        if dup <= EDGE_DUP_BUDGET_BYTES or zoom <= 1:
-            return k, covers
-        covers = [coarsen_cover(c, 1) for c in covers]
-        k += 1
+def _locate(pdf: pd.DataFrame, edges_of, min_loc: int, x_col: str,
+            y_col: str) -> pd.DataFrame:
+    """Exact refinement of one Arrow batch: INSIDE-cover rows stay,
+    BOUNDARY-cover rows stay when locate() against their zone's edges
+    (``edges_of(zone_id)``) reaches ``min_loc``."""
+    keep = pdf["cover"].to_numpy() == INSIDE
+    px, py = pdf[x_col].to_numpy(), pdf[y_col].to_numpy()
+    for zid, idx in pdf.groupby("zone_id").indices.items():
+        idx = idx[~keep[idx]]
+        if len(idx):
+            keep[idx] = kernel.locate_points(px[idx], py[idx],
+                                             edges_of(zid)) >= min_loc
+    return pdf[keep]
+
+
+def _broadcast_refiner(spark: SparkSession, zones: list[PreparedZone],
+                       locate) -> Refiner:
+    """Driver-held edges, ``sc.broadcast`` whole, refined in one
+    ``mapInPandas``. Batch input passes a ``rebalance`` first, so AQE
+    sizes the Python stage by boundary-band bytes (one task for a small
+    query, advisory-size tasks with skew splitting at scale) rather than
+    by scan splits: each Python task costs ~0.2-0.3 CPU-s before it
+    reads a row."""
+    edges_bc = spark.sparkContext.broadcast(
+        {z.zone_id: z.edges for z in zones})
+
+    def refine(rows: DataFrame, schema: T.StructType) -> DataFrame:
+        cols = schema.names
+
+        def go(batches):
+            for pdf in batches:
+                if len(pdf):
+                    yield locate(pdf, edges_bc.value.__getitem__)[cols]
+
+        if not rows.isStreaming:
+            rows = rows.hint("rebalance")
+        return rows.mapInPandas(go, schema=schema)
+    return refine
+
+
+def _cogroup_refiner(edges: DataFrame, locate) -> Refiner:
+    """Edges as a (zone_id, edges) frame of one row per zone (int64 LE
+    bytes, the zoneprep artifact form): the boundary band co-groups with
+    it on ``zone_id``, so each zone's edges ship once, to the task that
+    probes it, and no executor holds the whole edge set."""
+    def refine(rows: DataFrame, schema: T.StructType) -> DataFrame:
+        cols = schema.names
+
+        def go(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            if len(left) == 0 or len(right) == 0:
+                return left.iloc[0:0][cols]
+            e = np.frombuffer(bytes(right["edges"].iloc[0]), dtype="<i8") \
+                .astype(np.int64).reshape(-1, 4)
+            return locate(left, lambda _zid: e)[cols]
+
+        return rows.groupBy("zone_id").cogroup(edges.groupBy("zone_id")) \
+            .applyInPandas(go, schema=schema)
+    return refine
 
 
 def join_zones(points: DataFrame, zones: list[PreparedZone],
                predicate: Predicate = "within",
                cell_col: str = "cell_id", x_col: str = "x", y_col: str = "y",
                prefilter_bbox: bool = True,
-               columns: list[str] | None = None,
-               single_pass: bool = False,
-               max_broadcast_edges: int = EDGE_BROADCAST_LIMIT,
-               intervals=None) -> DataFrame:
-    """points × zones point-in-polygon join.
+               columns: list[str] | None = None) -> DataFrame:
+    """points × zones point-in-polygon join over driver-held
+    :class:`PreparedZone` s.
 
     Returns ``columns`` (default: all input columns) plus ``zone_id`` — one
     row per (point, zone) membership, exactly matching the reference
     predicate semantics. ``columns`` prunes the Arrow transfer — pass the
-    narrow output you need; x/y/cell/cover are retained internally.
+    narrow output you need; x/y/cover are retained internally.
 
-    Physical shape (broadcast regime, total edges ≤
-    ``max_broadcast_edges``): the points join the zones' run-length cover
-    intervals in one broadcast hash join (no shuffle of the fact side).
-    INSIDE-cover rows are accepted in the JVM and never reach Python.
-    BOUNDARY-cover rows pass a ``rebalance`` exchange, so AQE sizes the
-    Arrow ``mapInPandas`` locate stage by boundary-band bytes (one task for
-    a small query, advisory-size tasks with skew splitting at scale)
-    rather than by scan splits; each Python task costs ~0.2-0.3 CPU-s
-    before it reads a row. Streaming input skips the rebalance.
-    ``single_pass=True`` instead runs every candidate row through one
-    ``mapInPandas`` (one consumer of the source, for streaming or
-    expensive derived inputs). Past ``max_broadcast_edges`` the boundary
-    band co-groups with per-cell edge slices instead.
-
-    ``intervals``: optional pre-computed run-length interval table (a
-    pandas or Spark DataFrame with cell_row/c0/c1/zone_id/cover — the
-    operators.zoneprep artifact form). When given, the broadcast build
-    side is taken AS-IS and the zones' ``cover`` dicts are never read
-    (zoneprep.collect_prepared_light). Requires the broadcast regime.
+    One :func:`_interval_join` part per cover zoom, its intervals built
+    by :func:`zone_intervals_df`. Up to ``EDGE_BROADCAST_LIMIT`` total
+    edges the boundary band refines against broadcast edges (rebalanced
+    for batch input, one ``mapInPandas`` for streaming input); past it,
+    against a local Arrow edges frame of one row per zone, co-grouped on
+    ``zone_id``.
     """
-    spark = points.sparkSession
-    min_loc = _MIN_LOC[predicate]
     if not zones:
         raise ValueError("join_zones requires at least one PreparedZone")
-
-    if prefilter_bbox and zones:
-        mnx = min(z.bbox[0] for z in zones)
-        mny = min(z.bbox[1] for z in zones)
-        mxx = max(z.bbox[2] for z in zones)
-        mxy = max(z.bbox[3] for z in zones)
-        points = bbox_filter(points, mnx, mny, mxx, mxy, x_col, y_col)
-
-    # adaptive cover zooms may differ per zone: process per zoom group
-    zooms = sorted({z.zoom for z in zones})
-    if len(zooms) > 1:
-        parts = [join_zones(points, [z for z in zones if z.zoom == zm],
-                            predicate=predicate, cell_col=cell_col,
-                            x_col=x_col, y_col=y_col,
-                            prefilter_bbox=prefilter_bbox, columns=columns,
-                            single_pass=single_pass,
-                            intervals=None if intervals is None else
-                            intervals.filter(F.col("zone_id").isin(
-                                [z.zone_id for z in zones if z.zoom == zm]))
-                            if isinstance(intervals, DataFrame) else
-                            intervals[intervals["zone_id"].isin(
-                                {z.zone_id for z in zones
-                                 if z.zoom == zm})],
-                            max_broadcast_edges=max_broadcast_edges)
-                 for zm in zooms]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-    cover_zoom = zooms[0]
-
-    out_cols = list(columns) if columns is not None else \
-        [c for c in points.columns]
-    need = list(dict.fromkeys(out_cols + [x_col, y_col]))
-    total_edges = sum(len(z.edges) for z in zones)
-    final_cols = list(dict.fromkeys(out_cols + ["zone_id"]))
-
-    if total_edges > max_broadcast_edges:
-        if intervals is not None:
-            raise ValueError(
-                "intervals= (cover-less zones) requires the broadcast "
-                "regime; this zone set's edges exceed "
-                f"{max_broadcast_edges} — collect full covers "
-                "(zoneprep.collect_prepared) for the shuffle-cogroup "
-                "fallback")
-        k, fb_covers = _fit_fallback_covers(zones)
-        fb_zoom = cover_zoom - k
-        points = points.select(
-            *need, cover_key_col(F.col(x_col), F.col(y_col), fb_zoom)
-            .alias("_ck"))
-        zc = zone_cells_df(spark, zones, covers=fb_covers)
-        # SHUFFLE-JOIN FALLBACK (SURVEY §7.4 broadcast-size discipline):
-        # the edge set is too big to ship whole to every executor. Turbo
-        # rows stay pure JVM; boundary rows CO-GROUP with per-cell edge
-        # slices on (cover_key, zone_id) — each executor sees only the
-        # edges of the cells it processes, one shuffle of the (skinny)
-        # boundary band plus the sliced edge table.
-        candk = points.join(F.broadcast(zc),
-                            points["_ck"] == zc["cover_key"], "inner") \
-            .drop("cover_key")
-        turbo = candk.filter(F.col("cover") == INSIDE).select(*final_cols)
-        bnd_cols = list(dict.fromkeys(final_cols + [x_col, y_col, "_ck"]))
-        bnd = candk.filter(F.col("cover") == BOUNDARY).select(*bnd_cols)
-        edge_tbl = spark.createDataFrame(
-            _edge_cells_pdf(zones, covers=fb_covers))
-        out_schema = turbo.schema
-        min_loc_f = min_loc
-
-        def locate_group(left: pd.DataFrame, right: pd.DataFrame):
-            if len(left) == 0 or len(right) == 0:
-                return left.iloc[0:0][final_cols]
-            edges = np.frombuffer(right["edges_blob"].iloc[0],
-                                  dtype=np.int64).reshape(-1, 4)
-            loc = kernel.locate_points(left[x_col].to_numpy(),
-                                       left[y_col].to_numpy(), edges)
-            return left.loc[loc >= min_loc_f, final_cols]
-
-        boundary = bnd.groupBy("_ck", "zone_id").cogroup(
-            edge_tbl.groupBy("cover_key", "zone_id")) \
-            .applyInPandas(locate_group, schema=out_schema)
-        return turbo.unionByName(boundary)
-
-    # broadcast path: interval build side (run-length cover) — equi-join
-    # on the cell row with a col-range residual inside the same broadcast
-    # hash join; the build is ~1k rows/zone instead of ~70k cells/zone
-    shift = 32 - cover_zoom
-    points = points.select(
-        *need,
-        F.shiftright(F.col(x_col).cast("long") + F.lit(1 << 31), shift)
-        .alias("_cc"),
-        F.shiftright(F.lit(0x7FFFFFFF) - F.col(y_col).cast("long"), shift)
-        .alias("_rr"))
-    if isinstance(intervals, DataFrame):
-        # executor-built interval frame (zoneprep.intervals_table) used
-        # AS-IS: the build side never transits the driver as Python rows
-        iv = intervals.select("cell_row", "c0", "c1", "zone_id", "cover")
-    elif intervals is not None:
-        from pyspark.sql import types as _T
-        iv_schema = _T.StructType([
-            _T.StructField("cell_row", _T.LongType(), False),
-            _T.StructField("c0", _T.LongType(), False),
-            _T.StructField("c1", _T.LongType(), False),
-            _T.StructField("zone_id", _T.StringType(), False),
-            _T.StructField("cover", _T.IntegerType(), False),
-        ])
-        iv = spark.createDataFrame(
-            intervals[["cell_row", "c0", "c1", "zone_id", "cover"]],
-            iv_schema)
-    else:
-        iv = zone_intervals_df(spark, zones)
-    cand = points.join(
-        F.broadcast(iv),
-        (F.col("_rr") == F.col("cell_row"))
-        & (F.col("_cc") >= F.col("c0")) & (F.col("_cc") <= F.col("c1")),
-        "inner").drop("cell_row", "c0", "c1", "_cc", "_rr")
-
-    edges_bc = spark.sparkContext.broadcast(
-        {z.zone_id: z.edges for z in zones})
-
-    if single_pass:
-        in_schema = cand.schema
-        from pyspark.sql import types as T
-        out_schema = T.StructType(
-            [in_schema[c] for c in final_cols])
-
-        def locate_all(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                keep = (pdf["cover"].to_numpy() == INSIDE)
-                bmask = ~keep
-                if bmask.any():
-                    px = pdf[x_col].to_numpy()
-                    py = pdf[y_col].to_numpy()
-                    sub = pdf.loc[bmask]
-                    for zid, idx in sub.groupby("zone_id").indices.items():
-                        gi = sub.index.to_numpy()[idx]
-                        loc = kernel.locate_points(px[gi], py[gi],
-                                                   edges_bc.value[zid])
-                        keep[gi] = loc >= min_loc
-                yield pdf.loc[keep, final_cols]
-
-        return cand.mapInPandas(locate_all, schema=out_schema)
-
-    # two-branch variant: INSIDE rows never cross the Python boundary
-    turbo = cand.filter(F.col("cover") == INSIDE).select(*final_cols)
-    bnd = cand.filter(F.col("cover") == BOUNDARY) \
-        .select(*dict.fromkeys(final_cols + [x_col, y_col]))
-    if not points.isStreaming:
-        # size the Python stage by the boundary band, not by scan splits
-        bnd = bnd.hint("rebalance")
-    out_schema = turbo.schema
-
-    def locate_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[x_col].to_numpy()
-            py = pdf[y_col].to_numpy()
-            for zid, idx in pdf.groupby("zone_id").indices.items():
-                loc = kernel.locate_points(px[idx], py[idx],
-                                           edges_bc.value[zid])
-                keep[idx] = loc >= min_loc
-            yield pdf.loc[keep, final_cols]
-
-    boundary = bnd.mapInPandas(locate_batches, schema=out_schema)
-    return turbo.unionByName(boundary)
+    spark = points.sparkSession
+    locate = partial(_locate, min_loc=_MIN_LOC[predicate],
+                     x_col=x_col, y_col=y_col)
+    broadcast = sum(len(z.edges) for z in zones) <= EDGE_BROADCAST_LIMIT
+    parts = []
+    # adaptive cover zooms may differ per zone: one part per zoom
+    for zoom in sorted({z.zoom for z in zones}):
+        group = [z for z in zones if z.zoom == zoom]
+        pts = bbox_filter(points,
+                          min(z.bbox[0] for z in group),
+                          min(z.bbox[1] for z in group),
+                          max(z.bbox[2] for z in group),
+                          max(z.bbox[3] for z in group),
+                          x_col, y_col) if prefilter_bbox else points
+        if broadcast:
+            refine = _broadcast_refiner(spark, group, locate)
+        else:
+            refine = _cogroup_refiner(local_frame(
+                spark, [(z.zone_id, np.ascontiguousarray(
+                    z.edges, dtype="<i8").tobytes()) for z in group],
+                "zone_id string, edges binary"), locate)
+        parts.append((pts, zoom, zone_intervals_df(spark, group), refine))
+    out_cols = list(columns) if columns is not None else points.columns
+    return _interval_join(parts, out_cols, x_col, y_col)
 
 
-#: default interval-broadcast budget for join_zones_catalog: ~8M rows ×
+#: interval-broadcast budget floor for join_zones_catalog: ~8M rows ×
 #: ~33 B/row ≈ 260 MB — comfortably under Spark's 8 GB broadcast hard
-#: cap and a sane executor-memory share; past it the catalog region-
-#: partitions into separate joins (the >10⁵-zone mitigation named in
-#: BENCH/ZONEPREP.md). Since r6 this is the FLOOR of the auto-derived
-#: budget (:func:`_auto_iv_budget`), not the default itself — the 10⁵-
-#: zone fixture measured 70.7 s in the single-broadcast regime vs
-#: 172.6 s region-partitioned at this constant, so the regime choice now
-#: follows executor memory instead of assuming the smallest executor.
+#: cap and a sane executor-memory share; past the budget the catalog
+#: region-partitions into separate joins (the >10⁵-zone mitigation named
+#: in BENCH/ZONEPREP.md). The budget itself follows executor memory
+#: (:func:`_auto_iv_budget`) — the 10⁵-zone fixture measured 70.7 s in
+#: the single-broadcast regime vs 172.6 s region-partitioned at this
+#: constant.
 CATALOG_IV_BUDGET = 8_000_000
 
 #: conservative in-memory footprint per broadcast interval row once
@@ -461,65 +331,42 @@ def join_zones_catalog(points: DataFrame, prepped: DataFrame,
                        predicate: Predicate = "within",
                        x_col: str = "x", y_col: str = "y",
                        prefilter_bbox: bool = True,
-                       columns: list[str] | None = None,
-                       max_broadcast_intervals: int | None = None,
-                       region_zoom: int = REGION_ZOOM,
-                       boundary_salt: int = 1) -> DataFrame:
+                       columns: list[str] | None = None) -> DataFrame:
     """points × prepared-zone-CATALOG join, Spark end-to-end.
 
     ``prepped`` is the :func:`operators.zoneprep.prepared_zones_df`
     artifact frame (or the same rows re-loaded from parquet /
     SnapshotTable). Unlike :func:`join_zones`, NO per-zone object ever
-    reaches the driver (VERDICT r4 #1):
+    reaches the driver: the same :func:`_interval_join` core runs with
+    intervals exploded from the artifacts ON EXECUTORS
+    (``zoneprep.intervals_table``, broadcast by Spark's JVM
+    BroadcastExchange) and the boundary band co-grouped with the
+    artifacts' per-zone edge blobs on ``zone_id``. Driver work is
+    per-(zoom[, region-cell]) AGGREGATE rows only — independent of
+    edge/cover/interval counts.
 
-    * build side: the run-length interval table is exploded from the
-      artifacts ON EXECUTORS (``zoneprep.intervals_table``) and handed
-      to Spark's JVM BroadcastExchange via ``F.broadcast`` — the former
-      ``collect_prepared_light`` pandas assembly (O(intervals)
-      driver-serial, 16 s at 10k zones) disappears;
-    * boundary band: skinny candidate rows CO-GROUP with the per-zone
-      edge blobs on ``zone_id`` — each executor deserializes only the
-      edges of the zones it probes; total edge bytes never sit on one
-      machine (this is also what lifts the ~1 GB sc.broadcast edge
-      ceiling);
-    * driver work: per-(zoom[, region-cell]) AGGREGATE rows only —
-      O(#zooms + #occupied-region-cells) skinny tuples, independent of
-      edge/cover/interval counts.
-
-    Past ``max_broadcast_intervals`` the catalog REGION-PARTITIONS: zones
-    group by the coarse grid cell of their bbox center, cells bin-pack
-    (z-order, spatially coherent) into regions whose interval sum fits
-    the budget, and each region runs its own broadcast join against the
-    bbox-filtered probe — each probe scan prunes to the region's window
-    at the parquet level, so R regions cost R pruned scans, not R full
-    ones. A single over-budget cell further splits by zone-id hash.
+    Past the interval budget (:func:`_auto_iv_budget`, from executor
+    memory) the catalog REGION-PARTITIONS: zones group by the coarse
+    grid cell of their bbox center, cells bin-pack (z-order, spatially
+    coherent) into regions whose interval sum fits the budget, and each
+    region runs its own broadcast join against the bbox-filtered probe —
+    each probe scan prunes to the region's window at the parquet level,
+    so R regions cost R pruned scans, not R full ones. A single
+    over-budget cell further splits by zone-id hash.
 
     Output rows/values are byte-identical to
     ``join_zones(points, zones, ...)`` over the same catalog (pytest
     pins both regimes); one row per (point, zone) membership.
-
     ``prepped`` is re-read once per (zoom, region) — pass a
-    parquet/SnapshotTable-backed frame (or ``.persist()`` it) for
-    multi-region catalogs so zone geometry is not re-prepared per
-    region; this function persists it defensively when region
-    partitioning activates.
-
-    ``boundary_salt`` > 1 scatters each zone's boundary band over that
-    many cogroup keys (edge blobs duplicated per salt) — opt in when one
-    zone's boundary dominates (megacity skew) on a real cluster.
+    parquet/SnapshotTable-backed frame (or ``.persist()`` it); this
+    function persists it when region partitioning activates.
     """
+    from libgeodesk_spark.operators.zoneprep import intervals_table
     spark = points.sparkSession
-    if max_broadcast_intervals is None:
-        # derive the regime from executor memory (VERDICT r5 #4): the
-        # 10^5-zone fixture is 32.1M intervals — a single ~1 GB
-        # broadcast at 8 GB heap (70.7 s) vs 172.6 s region-partitioned
-        # under the old universal 8M constant
-        max_broadcast_intervals = _auto_iv_budget(spark)
-    min_loc = _MIN_LOC[predicate]
-    out_cols = list(columns) if columns is not None else \
-        [c for c in points.columns]
-    final_cols = list(dict.fromkeys(out_cols + ["zone_id"]))
-    need = list(dict.fromkeys(out_cols + [x_col, y_col]))
+    budget = _auto_iv_budget(spark)
+    locate = partial(_locate, min_loc=_MIN_LOC[predicate],
+                     x_col=x_col, y_col=y_col)
+    out_cols = list(columns) if columns is not None else points.columns
 
     # ---- driver metadata: one aggregate row per zoom -------------------
     zmeta = (prepped.groupBy("zoom")
@@ -539,61 +386,16 @@ def join_zones_catalog(points: DataFrame, prepped: DataFrame,
                              max(r["mxx"] for r in zmeta),
                              max(r["mxy"] for r in zmeta), x_col, y_col)
 
-    def one_join(pz: DataFrame, zoom: int, pts: DataFrame) -> DataFrame:
-        """One broadcast interval join + cogrouped boundary band."""
-        from libgeodesk_spark.operators.zoneprep import intervals_table
-        shift = 32 - zoom
-        probe = pts.select(
-            *need,
-            F.shiftright(F.col(x_col).cast("long") + F.lit(1 << 31), shift)
-            .alias("_cc"),
-            F.shiftright(F.lit(0x7FFFFFFF) - F.col(y_col).cast("long"),
-                         shift).alias("_rr"))
-        iv = intervals_table(pz)
-        cand = probe.join(
-            F.broadcast(iv),
-            (F.col("_rr") == F.col("cell_row"))
-            & (F.col("_cc") >= F.col("c0")) & (F.col("_cc") <= F.col("c1")),
-            "inner").drop("cell_row", "c0", "c1", "_cc", "_rr")
-        turbo = cand.filter(F.col("cover") == INSIDE).select(*final_cols)
-        bnd_cols = list(dict.fromkeys(final_cols + [x_col, y_col]))
-        bnd = cand.filter(F.col("cover") == BOUNDARY).select(*bnd_cols)
-        edges = pz.select("zone_id", "edges")
-        if boundary_salt > 1:
-            salt = F.pmod(F.xxhash64(F.col(x_col), F.col(y_col)),
-                          F.lit(boundary_salt)).cast("int")
-            bnd = bnd.withColumn("_bsalt", salt)
-            edges = edges.select(
-                "zone_id", "edges",
-                F.explode(F.sequence(F.lit(0), F.lit(boundary_salt - 1)))
-                .alias("_bsalt"))
-            keys = ["zone_id", "_bsalt"]
-        else:
-            keys = ["zone_id"]
-        out_schema = turbo.schema
-        min_loc_f, xc, yc = min_loc, x_col, y_col
-
-        def locate_group(left: pd.DataFrame, right: pd.DataFrame):
-            if len(left) == 0 or len(right) == 0:
-                return left.iloc[0:0][final_cols]
-            edg = np.frombuffer(bytes(right["edges"].iloc[0]),
-                                dtype="<i8").astype(np.int64).reshape(-1, 4)
-            loc = kernel.locate_points(left[xc].to_numpy(),
-                                       left[yc].to_numpy(), edg)
-            return left.loc[loc >= min_loc_f, final_cols]
-
-        boundary = bnd.groupBy(*keys).cogroup(edges.groupBy(*keys)) \
-            .applyInPandas(locate_group, schema=out_schema)
-        return turbo.unionByName(boundary)
+    def part(pts: DataFrame, zoom: int, pz: DataFrame):
+        return (pts, zoom, intervals_table(pz),
+                _cogroup_refiner(pz.select("zone_id", "edges"), locate))
 
     # ---- single-broadcast regime --------------------------------------
-    if total_iv <= max_broadcast_intervals:
-        parts = [one_join(prepped.filter(F.col("zoom") == r["zoom"]),
-                          int(r["zoom"]), points) for r in zmeta]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    if total_iv <= budget:
+        return _interval_join(
+            [part(points, int(r["zoom"]),
+                  prepped.filter(F.col("zoom") == r["zoom"]))
+             for r in zmeta], out_cols, x_col, y_col)
 
     # ---- region-partitioned regime (past the broadcast ceiling) -------
     # project away the cover binaries FIRST: this join reads only bbox /
@@ -606,7 +408,7 @@ def join_zones_catalog(points: DataFrame, prepped: DataFrame,
         "zone_id", "zoom", "min_x", "min_y", "max_x", "max_y",
         "edges", "iv_rows", "iv_c0", "iv_c1", "iv_cover") \
         .persist(StorageLevel.DISK_ONLY)
-    shift = 32 - region_zoom
+    shift = 32 - REGION_ZOOM
     cx = (F.col("min_x") + F.col("max_x")) / 2
     cy = (F.col("min_y") + F.col("max_y")) / 2
     rc = (F.shiftleft(
@@ -625,14 +427,14 @@ def join_zones_catalog(points: DataFrame, prepped: DataFrame,
     for r in sorted(cells, key=lambda r: (r["_rc"], r["zoom"])):
         iv_n = int(r["n_iv"])
         splits = 1
-        if iv_n > max_broadcast_intervals:
+        if iv_n > budget:
             # one cell over budget: split its zones by id hash (and
             # close any partially-filled region first so no split
             # region also carries accumulated cells)
-            splits = -(-iv_n // max_broadcast_intervals)
+            splits = -(-iv_n // budget)
             if acc:
                 region, acc = region + 1, 0
-        elif acc and acc + iv_n > max_broadcast_intervals:
+        elif acc and acc + iv_n > budget:
             region, acc = region + 1, 0
         assign.append((int(r["_rc"]), int(r["zoom"]), region, splits))
         for s in range(splits):
@@ -662,13 +464,9 @@ def join_zones_catalog(points: DataFrame, prepped: DataFrame,
         pts_r = bbox_filter(points, box[0], box[1], box[2], box[3],
                             x_col, y_col) if prefilter_bbox else points
         for zm in sorted(zooms):
-            pz = tagged.filter((F.col("_region") == reg)
-                               & (F.col("zoom") == zm))
-            parts.append(one_join(pz, zm, pts_r))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+            parts.append(part(pts_r, zm, tagged.filter(
+                (F.col("_region") == reg) & (F.col("zoom") == zm))))
+    return _interval_join(parts, out_cols, x_col, y_col)
 
 
 def crossing_segments(segments: DataFrame, zones: list[PreparedZone],

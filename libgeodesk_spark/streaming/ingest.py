@@ -146,11 +146,10 @@ def stream_within(stream: DataFrame, zones, predicate: str = "within",
     Streaming runs it map-side inside each micro-batch with no state
     store, no watermark, and no shuffle of the stream (the reference's
     query-over-live-data analog: the prepared filter is built once and
-    every arriving feature tests against it). ``single_pass=True`` is
-    forced: one mapInPandas consumer per micro-batch instead of the
-    batch path's two-branch union re-reading the source."""
+    every arriving feature tests against it). ``join_zones`` sees a
+    streaming input and runs one mapInPandas consumer per micro-batch
+    instead of the batch path's two-branch union re-reading the source."""
     from libgeodesk_spark.operators.spatial_join import join_zones
-    kw.setdefault("single_pass", True)
     return join_zones(stream, zones, predicate=predicate,
                       columns=columns, **kw)
 

@@ -106,12 +106,16 @@ class TestDegenerateShapes:
         assert goql_filter(df, "*[amenity=pub]").count() == 0
 
     def test_zoneprep_empty_catalog(self, spark):
+        from libgeodesk_spark.operators.spatial_join import join_zones_catalog
         from libgeodesk_spark.operators.zoneprep import (
-            collect_prepared_light, prepare_zones, prepared_zones_df)
+            intervals_table, prepare_zones, prepared_zones_df)
         wkb = spark.createDataFrame([], "zone_id string, wkb binary")
         assert prepare_zones(wkb) == []
-        zones, iv = collect_prepared_light(prepared_zones_df(wkb))
-        assert zones == [] and len(iv) == 0
+        prepped = prepared_zones_df(wkb)
+        assert intervals_table(prepped).count() == 0
+        pts = spark.createDataFrame([(1, 10, 10)], "pid long, x long, y long")
+        with pytest.raises(ValueError, match="empty prepared catalog"):
+            join_zones_catalog(pts, prepped)
 
     def test_asof_empty_right(self, spark):
         from libgeodesk_spark.operators.asof import asof_join

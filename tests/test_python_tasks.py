@@ -8,6 +8,8 @@ the query paths keep Python stages sized by the rows that need Python:
 * ``join_zones`` sends only the boundary band through a ``rebalance``
   exchange, so AQE runs a small query's ``mapInPandas`` locate in ONE
   task however many scan splits the source has;
+* both branches of ``join_zones`` (JVM-accepted INSIDE rows, refined
+  BOUNDARY rows) share one broadcast of the interval table;
 * streaming input keeps the plan free of that exchange.
 """
 
@@ -94,6 +96,18 @@ def test_join_zones_runs_one_python_task(spark, split_points):
     assert len(pandas_nodes) == 1
     # the MapInPandas stage runs one task per partition of its input
     assert pandas_nodes[0].child().execute().getNumPartitions() == 1
+
+
+def test_join_zones_broadcasts_intervals_once(spark, split_points):
+    zone = prepare_zone("comb", [np.array(r) for r in GATE_ZONES["comb"]])
+    agg = join_zones(split_points, [zone], predicate="within",
+                     columns=["image_id"]).groupBy().count()
+    assert agg.collect()[0][0] > 0
+    nodes = _nodes(agg._jdf.queryExecution().executedPlan())
+    exchanges = [n for n in nodes if n.nodeName() == "BroadcastExchange"]
+    assert len(exchanges) == 1
+    assert "cell_row" in exchanges[0].child().output().toString()
+    assert any(n.nodeName() == "ReusedExchange" for n in nodes)
 
 
 def test_streaming_join_has_no_rebalance(spark, split_points, tmp_path):

@@ -109,39 +109,20 @@ def test_max_meters_from(points, points_pd):
     assert sorted(got.image_id) == sorted(want)
 
 
+def _pairs(df):
+    return sorted((r.image_id, r.zone_id) for r in df.collect())
+
+
 class TestShuffleFallback:
-    """join_zones with max_broadcast_edges exceeded: boundary rows co-group
-    with per-cell edge slices instead of a whole-set broadcast; results
-    must be identical to the broadcast path."""
+    """join_zones past EDGE_BROADCAST_LIMIT: boundary rows co-group on
+    zone_id with a local edges frame of one row per zone instead of a
+    whole-set broadcast; results must be identical to the broadcast
+    path."""
 
-    def test_fallback_matches_broadcast(self, spark):
-        import numpy as np
-
-        from libgeodesk_spark.geom.zones import prepare_zone
-        from libgeodesk_spark.operators.spatial_join import join_zones
-        from libgeodesk_spark.sources.points import GATE_ZONES, derived_points
-
-        zones = [prepare_zone(n, [np.array(r) for r in rings])
-                 for n, rings in GATE_ZONES.items()]
-        pts = derived_points(spark, "/root/testdata/sf0.001")
-        base = join_zones(pts, zones, predicate="within",
-                          columns=["image_id"])
-        fb = join_zones(pts, zones, predicate="within",
-                        columns=["image_id"], max_broadcast_edges=10)
-        a = sorted((r.image_id, r.zone_id) for r in base.collect())
-        b = sorted((r.image_id, r.zone_id) for r in fb.collect())
-        assert a == b and len(a) > 0
-
-    def test_fallback_many_zone_set(self, spark):
-        """A zone SET with enough total edges to exceed a small broadcast
-        limit: 60 detailed polygons (~100 edges each) scattered over the
-        window, fallback vs broadcast identical for both predicates."""
-        import numpy as np
-
-        from libgeodesk_spark.geom.zones import prepare_zone
-        from libgeodesk_spark.operators.spatial_join import join_zones
-        from libgeodesk_spark.sources.points import derived_points
-
+    @pytest.fixture(scope="class")
+    def many_zones(self):
+        """60 detailed polygons (100 vertices each) scattered over the
+        sf0.001 window."""
         rng = np.random.default_rng(7)
         zones = []
         for i in range(60):
@@ -155,29 +136,81 @@ class TestShuffleFallback:
             ring = np.stack([xs, ys], axis=1)
             ring = np.vstack([ring, ring[:1]])
             zones.append(prepare_zone(f"z{i:03d}", [ring]))
-        pts = derived_points(spark, "/root/testdata/sf0.001")
-        for pred in ("within", "intersects"):
-            base = join_zones(pts, zones, predicate=pred,
-                              columns=["image_id"])
-            fb = join_zones(pts, zones, predicate=pred,
-                            columns=["image_id"], max_broadcast_edges=500)
-            a = sorted((r.image_id, r.zone_id) for r in base.collect())
-            b = sorted((r.image_id, r.zone_id) for r in fb.collect())
-            assert a == b and len(a) > 0
+        return zones
 
-    def test_single_megazone_raises(self):
-        import numpy as np
-        import pytest as _pytest
+    def test_fallback_matches_broadcast(self, points, zones, monkeypatch):
+        from libgeodesk_spark.operators import spatial_join
 
-        from libgeodesk_spark.geom.zones import PreparedZone
-        from libgeodesk_spark.operators.spatial_join import (
-            PER_ZONE_EDGE_LIMIT,
-            _edge_cells_pdf,
-        )
-        edges = np.zeros((PER_ZONE_EDGE_LIMIT + 1, 4), dtype=np.int64)
-        z = PreparedZone("mega", edges, (0, 0, 1, 1), 16, {1: 0})
-        with _pytest.raises(ValueError, match="shuffle-fallback"):
-            _edge_cells_pdf([z])
+        zones = list(zones.values())
+        base = join_zones(points, zones, predicate="within",
+                          columns=["image_id"])
+        monkeypatch.setattr(spatial_join, "EDGE_BROADCAST_LIMIT", 10)
+        fb = join_zones(points, zones, predicate="within",
+                        columns=["image_id"])
+        a, b = _pairs(base), _pairs(fb)
+        assert a == b and len(a) > 0
+
+    def test_fallback_many_zone_set(self, points, many_zones, monkeypatch):
+        """A zone SET with more total edges than the broadcast limit:
+        fallback vs broadcast identical for both predicates."""
+        from libgeodesk_spark.operators import spatial_join
+
+        preds = ("within", "intersects")
+        want = {p: _pairs(join_zones(points, many_zones, predicate=p,
+                                     columns=["image_id"])) for p in preds}
+        monkeypatch.setattr(spatial_join, "EDGE_BROADCAST_LIMIT", 500)
+        for p in preds:
+            got = _pairs(join_zones(points, many_zones, predicate=p,
+                                    columns=["image_id"]))
+            assert got == want[p] and len(got) > 0
+
+    def test_fallback_ships_one_edge_row_per_zone(self, points, many_zones,
+                                                  monkeypatch):
+        from libgeodesk_spark.operators import spatial_join
+
+        frames = []
+        real = spatial_join._cogroup_refiner
+
+        def spy(edges, locate):
+            frames.append(edges)
+            return real(edges, locate)
+
+        monkeypatch.setattr(spatial_join, "EDGE_BROADCAST_LIMIT", 500)
+        monkeypatch.setattr(spatial_join, "_cogroup_refiner", spy)
+        join_zones(points, many_zones, columns=["image_id"])
+        assert frames
+        shipped = sorted(r.zone_id for f in frames for r in f.collect())
+        assert shipped == sorted(z.zone_id for z in many_zones)
+
+    def test_fallback_boundary_ties(self, spark, many_zones, monkeypatch):
+        """contains_point on probes placed ON zone vertices and near edge
+        midpoints — the boundary ties — matches the broadcast path and
+        the brute-force kernel."""
+        import pandas as pd
+
+        from libgeodesk_spark.operators import spatial_join
+
+        xy = []
+        for z in many_zones:
+            e = z.edges                             # (x1, y1, x2, y2) rows
+            xy.append(e[:, :2])
+            xy.append((e[:, :2] + e[:, 2:]) // 2)
+        xy = np.unique(np.vstack(xy), axis=0)
+        probes = spark.createDataFrame(pd.DataFrame({
+            "image_id": [f"p{i}" for i in range(len(xy))],
+            "x": xy[:, 0], "y": xy[:, 1]}))
+        base = join_zones(probes, many_zones, predicate="contains_point",
+                          columns=["image_id"])
+        a = _pairs(base)
+        monkeypatch.setattr(spatial_join, "EDGE_BROADCAST_LIMIT", 500)
+        fb = join_zones(probes, many_zones, predicate="contains_point",
+                        columns=["image_id"])
+        assert _pairs(fb) == a
+        want = sorted(
+            (f"p{i}", z.zone_id) for z in many_zones
+            for i in np.nonzero(kernel.locate_points(
+                xy[:, 0], xy[:, 1], z.edges) >= kernel.BOUNDARY)[0])
+        assert a == want and len(a) >= len(xy) // 2
 
 
 class TestWithinDistancePairs:

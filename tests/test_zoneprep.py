@@ -117,20 +117,17 @@ class TestZonePrepDistributed:
             assert z.cover == want.cover
         prepped.unpersist()
 
-    def test_light_intervals_path_matches_full(self, spark, zone_wkb_df):
-        """The large-catalog path (cover-less zones + executor-computed
-        interval table) must produce the SAME join as the full path —
-        incl. through a MIXED-ZOOM catalog (interval table filtered per
-        zoom group in the recursion)."""
-        from libgeodesk_spark.operators.spatial_join import join_zones
-        from libgeodesk_spark.operators.zoneprep import (
-            collect_prepared_light)
-        from libgeodesk_spark.sources.points import derived_points
-        pts = derived_points(spark, "/root/testdata/sf0.001") \
-            .select("image_id", "x", "y", "cell_id")
-        # gate zones + one HUGE zone forcing a coarser fitted zoom
-        # just under the MAX_ZONE_SPAN (2^30) contract — wide enough to
-        # force a much coarser fitted cover zoom than the gate zones
+    def test_light_intervals_path_matches_full(self, spark):
+        """The executor-built interval table (``intervals_table``, the
+        catalog join's build side) equals the driver-built one from the
+        collected zones' full covers (``zone_intervals_df``, the
+        driver-zone join's build side) — row for row, through a
+        MIXED-ZOOM catalog."""
+        from libgeodesk_spark.operators.spatial_join import zone_intervals_df
+        from libgeodesk_spark.operators.zoneprep import intervals_table
+        # gate zones + one HUGE zone just under the MAX_ZONE_SPAN (2^30)
+        # contract — wide enough to force a much coarser fitted cover
+        # zoom than the gate zones
         big = np.array([[-200_000_000, 500_000_000],
                         [800_000_000, 500_000_000],
                         [800_000_000, 900_000_000],
@@ -141,29 +138,13 @@ class TestZonePrepDistributed:
         df = spark.createDataFrame(rows, "zone_id string, wkb binary")
         prepped = prepared_zones_df(df).persist()
         full = collect_prepared(prepped)
-        light, intervals = collect_prepared_light(prepped)
         assert len({z.zoom for z in full}) > 1      # mixed zooms for real
-        assert all(not z.cover for z in light)      # covers stayed out
-        # interval table == the driver-built one from full covers
-        from libgeodesk_spark.operators.spatial_join import (
-            zone_intervals_df)
-        want_iv = zone_intervals_df(spark, full).toPandas()
         key = ["zone_id", "cover", "cell_row", "c0", "c1"]
-        got_iv = intervals.sort_values(key).reset_index(drop=True)[key]
-        want_iv = want_iv.sort_values(key).reset_index(drop=True)[key]
-        assert got_iv.astype("int64", errors="ignore").equals(
-            want_iv.astype("int64", errors="ignore")) or \
-            got_iv.values.tolist() == want_iv.values.tolist()
-        a = sorted(map(tuple,
-                       join_zones(pts, light, predicate="within",
-                                  columns=["image_id"],
-                                  intervals=intervals)
-                       .select("image_id", "zone_id").collect()))
-        b = sorted(map(tuple,
-                       join_zones(pts, full, predicate="within",
-                                  columns=["image_id"])
-                       .select("image_id", "zone_id").collect()))
-        assert a == b and len(a) > 0
+        got = sorted(map(tuple, intervals_table(prepped).select(*key)
+                         .collect()))
+        want = sorted(map(tuple, zone_intervals_df(spark, full)
+                          .select(*key).collect()))
+        assert got == want and len(got) > 0
         prepped.unpersist()
 
     def test_wkt_catalog_equals_wkb(self, spark, zone_wkb_df):
@@ -248,40 +229,15 @@ class TestCatalogJoinEndToEnd:
                          .select("image_id", "zone_id").collect()))
         assert got == self._want(pts, mixed_catalog) and len(got) > 0
 
-    def test_region_partitioned_regime(self, spark, pts, mixed_catalog):
+    def test_region_partitioned_regime(self, spark, pts, mixed_catalog,
+                                       monkeypatch):
         """A tiny interval budget forces region bin-packing AND the
         hash-split of an over-budget cell; output must not change."""
-        from libgeodesk_spark.operators.spatial_join import (
-            join_zones_catalog)
+        from libgeodesk_spark.operators import spatial_join
+        monkeypatch.setattr(spatial_join, "_auto_iv_budget",
+                            lambda spark: 300)
         got = sorted(map(tuple,
-                         join_zones_catalog(pts, mixed_catalog,
-                                            columns=["image_id"],
-                                            max_broadcast_intervals=300)
-                         .select("image_id", "zone_id").collect()))
-        assert got == self._want(pts, mixed_catalog) and len(got) > 0
-
-    def test_boundary_salt_identical(self, spark, pts, mixed_catalog):
-        from libgeodesk_spark.operators.spatial_join import (
-            join_zones_catalog)
-        got = sorted(map(tuple,
-                         join_zones_catalog(pts, mixed_catalog,
-                                            columns=["image_id"],
-                                            boundary_salt=3)
-                         .select("image_id", "zone_id").collect()))
-        assert got == self._want(pts, mixed_catalog) and len(got) > 0
-
-    def test_join_zones_accepts_interval_dataframe(self, spark, pts,
-                                                   mixed_catalog):
-        """join_zones(intervals=<Spark DataFrame>) — the executor-built
-        frame used directly as the broadcast build side, incl. the
-        mixed-zoom recursion filtering it per zoom group."""
-        from libgeodesk_spark.operators.spatial_join import join_zones
-        from libgeodesk_spark.operators.zoneprep import (
-            collect_prepared_light, intervals_table)
-        light, _ = collect_prepared_light(mixed_catalog)
-        iv = intervals_table(mixed_catalog)
-        got = sorted(map(tuple,
-                         join_zones(pts, light, predicate="within",
-                                    columns=["image_id"], intervals=iv)
+                         spatial_join.join_zones_catalog(
+                             pts, mixed_catalog, columns=["image_id"])
                          .select("image_id", "zone_id").collect()))
         assert got == self._want(pts, mixed_catalog) and len(got) > 0

@@ -8,12 +8,7 @@ region-partitioned once the interval total passes the broadcast
 budget). Driver work is counted in METADATA ROWS (per-zoom aggregates +
 per-region-cell stats) — never edges, covers, or intervals.
 
-Also measures, for the comparison row, the r4 path's driver-serial
-`collect_prepared_light` assembly at the same scale, and checks the two
-outputs are row-identical via a distributed exceptAll (no driver
-materialization of the 10^7-membership result).
-
-Usage: python tools/zonecatalog_e2e_bench.py [n_zones] [--no-compare]
+Usage: python tools/zonecatalog_e2e_bench.py [n_zones]
 """
 
 from __future__ import annotations
@@ -30,9 +25,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def make_catalog(spark, n_zones: int):
-    """Same zone distribution as zonecatalog_join_bench.py (¼ in the
-    data window — catalog skew), generated in Spark partitions so the
-    driver never holds 10^5 rings either."""
+    """¼ of the zones in the data window (catalog skew), the rest over
+    the world; generated in Spark partitions so the driver never holds
+    10^5 rings either."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -75,13 +70,7 @@ def main():
     from libgeodesk_spark.operators.spatial_join import join_zones_catalog
     from libgeodesk_spark.operators.zoneprep import prepared_zones_df
 
-    n_zones = 100_000
-    compare = True
-    for a in sys.argv[1:]:
-        if a == "--no-compare":
-            compare = False
-        else:
-            n_zones = int(a)
+    n_zones = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -135,33 +124,6 @@ def main():
                "img_per_sec": round(n_pts / join_sec),
                "driver_metadata_rows": zmeta_rows + cell_rows}
 
-        identical = None
-        old_assembly_sec = None
-        if compare:
-            from libgeodesk_spark.operators.spatial_join import join_zones
-            from libgeodesk_spark.operators.zoneprep import (
-                collect_prepared_light)
-            t0 = time.time()
-            zones, intervals = collect_prepared_light(prepped)
-            old_assembly_sec = round(time.time() - t0, 2)
-            print(f"r4-path driver assembly at this scale: "
-                  f"{old_assembly_sec}s ({len(intervals)} interval rows "
-                  f"through the driver)", flush=True)
-            t0 = time.time()
-            old = join_zones(pts, zones, predicate="within",
-                             columns=["image_id"], intervals=intervals)
-            old_n = old.count()
-            old_join_sec = round(time.time() - t0, 2)
-            diff = (out.exceptAll(old).count()
-                    + old.exceptAll(out).count())
-            identical = (diff == 0 and old_n == memberships)
-            assert identical, (diff, old_n, memberships)
-            print(f"row-identical to the driver-assembled path "
-                  f"(join {old_join_sec}s): OK", flush=True)
-            raw.update({"old_assembly_sec": old_assembly_sec,
-                        "old_join_sec": old_join_sec,
-                        "row_identical": identical})
-
         from libgeodesk_spark.operators.spatial_join import _auto_iv_budget
         budget = _auto_iv_budget(spark)
         regime = ("region-partitioned"
@@ -182,14 +144,6 @@ per-region-cell stats) — intervals broadcast as a DataFrame
 (JVM BroadcastExchange), edge blobs cogrouped to the boundary band on
 executors. Regime: {regime} (auto interval budget {budget:,} from
 executor memory — VERDICT r5 #4).
-"""
-        if compare:
-            md += f"""
-The r4 driver-assembled path at the same scale pays
-**{old_assembly_sec} s of driver-serial assembly** before its
-(otherwise equal) join; outputs verified **row-identical** by
-distributed exceptAll in both directions
-({memberships:,} = {memberships:,}, diff 0).
 """
         md += f"\nRaw: `{json.dumps(raw)}`\n"
         with open(os.path.join(REPO, "BENCH", "ZONEPREP.md"), "a") as f:
