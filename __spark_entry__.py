@@ -1063,55 +1063,6 @@ def _q_ann_cosine(spark, sf_dir):
         cosine_topk(emb, ANN_QIDS, 10).select("qid", "vec_id", "rank"), 10)
 
 
-def _q_audio_codec_features(spark, sf_dir):
-    """Self-asserting audio gate (rows-only): one deterministic clip set
-    pushed through the Spark audio pipeline (mapInPandas over
-    multimodal.audio_features) THREE times — as RIFF/WAVE PCM16 bytes,
-    as real FLAC bytes (RFC 9639, media/flac.py), and as the FAUD fake
-    container — must yield IDENTICAL integer features, and those must
-    equal an independent numpy oracle computed straight from the
-    synthesized samples (all three codecs quantize onto the same int16
-    grid, so the containers are transparent). Any drift raises
-    AssertionError -> the driver records err. No DuckDB oracle: SQL
-    cannot decode audio containers."""
-    import numpy as np
-    from libgeodesk_spark.media import multimodal as mm
-    from libgeodesk_spark.media.flac import encode_flac
-    sr = 16000
-    clips = [(i, mm.synth_audio(i, 1200 + 37 * i)) for i in range(48)]
-
-    def df_for(enc, name):
-        rows = [(f"clip{i:03d}", bytearray(enc(a, sr)), sr, len(a), 1, name)
-                for i, a in clips]
-        return spark.createDataFrame(rows, mm.AUDIO_SCHEMA)
-
-    expected = []
-    for i, a in clips:
-        q = np.clip(np.rint(a * 32767), -32768, 32767) \
-            .astype(np.int16).astype(np.float32) / 32767.0
-        expected.append((f"clip{i:03d}",
-                         int(round(float(np.sqrt(np.mean(q * q))) * 1e6)),
-                         int(np.sum(np.abs(np.diff(np.signbit(q))))),
-                         int(len(q) * 1000 / sr)))
-
-    encoders = (("wav", mm.encode_wav), ("flac", encode_flac),
-                ("faud", mm.encode_audio))
-    for name, enc in encoders:
-        got = [tuple(r) for r in
-               mm.audio_features(df_for(enc, name)).orderBy("clip_id")
-               .toPandas().itertuples(index=False)]
-        if got != expected:
-            bad = next((i for i, (g, e) in enumerate(zip(got, expected))
-                        if g != e), min(len(got), len(expected)))
-            detail = (f"{got[bad]} != {expected[bad]}"
-                      if bad < min(len(got), len(expected))
-                      else f"row count {len(got)} != {len(expected)}")
-            raise AssertionError(
-                f"audio gate: {name} features diverge from the numpy "
-                f"oracle at clip {bad}: {detail}")
-    return mm.audio_features(df_for(encoders[1][1], "flac"))
-
-
 def _q_goql(spark, sf_dir):
     from libgeodesk_spark.functions.goql import goql_filter
     return goql_filter(_docs(spark, sf_dir), GOQL_QUERY).select("doc_id")
@@ -1305,18 +1256,15 @@ def _q_zone_bbox(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ORDER MATTERS: the driver's CORRECTNESS run records the FIRST 50
-    entries only. Round-5 rotation (VERDICT r4 'Next round' #6): lead
-    with (a) rows NEW or with a CHANGED implementation this round
-    (quantizer persistence; zoneprep_within now Spark end-to-end; real
-    PNG under the tile gates; structural dedup keys; catalog legacy
-    reads), then (b) the 25 rows whose newest driver record is r3
-    (spatial/zone/GOQL/topology/stream_dedup/text_features), then (c)
-    refreshed r4 rows filling the window. The r4-recorded multi-green
-    rows take the tail; pytest + check_oracle still cover them every
-    round. After r5 every query's newest driver record is <= 1 round
-    old. In-window boundary (position 50) = audio_codec_features; first
-    out-of-window row = ann_cosine_topk (ADVICE r5: the registry count
-    puts the boundary there, matching the inline comments)."""
+    entries only. The order leads with (a) rows new or with a changed
+    implementation in round 5 (quantizer persistence; zoneprep_within
+    Spark end-to-end; real PNG under the tile gates; structural dedup
+    keys; catalog legacy reads), then (b) the rows whose newest driver
+    record was r3 (spatial/zone/GOQL/topology/stream_dedup/
+    text_features), then (c) refreshed r4 rows filling the window. The
+    remaining multi-green rows take the tail; pytest + check_oracle
+    still cover them every round. In-window boundary (position 50) =
+    ann_cosine_topk; first out-of-window row = clean_corpus."""
     return {
         # --- (a) new or implementation-changed this round -------------
         "ann_ivfpq_persisted": _q_ann_ivfpq_persisted,  # rows-only+asserts
@@ -1370,11 +1318,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "exact_dedup": _q_exact_dedup,
         "simhash": _q_simhash,
         "ann_topk": _q_ann_topk,
-        "audio_codec_features": _q_audio_codec_features,  # NEW r5:
-        # rows-only + numpy-oracle assert over wav/flac/faud codecs
+        "ann_cosine_topk": _q_ann_cosine,    # rows-only (float ranking)
         # --- beyond the 50-row window: r4-recorded multi-green --------
-        "ann_cosine_topk": _q_ann_cosine,    # rows-only (float ranking;
-        # r4-recorded, rotated out for the r5 window)
         "clean_corpus": _q_clean_corpus,
         "phash_near_dups": _q_phash_near_dups,
         "stream_window_counts": _q_stream_window_counts,

@@ -1,23 +1,16 @@
-"""Cell/tile assignment as Spark SQL expressions (and Arrow UDF variants).
+"""Cell/tile assignment as Spark SQL expressions.
 
-The hot path is the pure-Column implementation: the reference's tile math
-(include/geodesk/geom/Tile.h:47-55,230-231) is integer shifts and ors, so
-cell assignment compiles straight into whole-stage-codegen JVM arithmetic
-— zero Python in the per-row path, no shuffle, fully pushdown-friendly.
-
-``cell_encode_udf`` is the Arrow-batched pandas UDF variant of the same
-function (the "batched cell encode" API shape of the north rule); it exists
-for parity/benchmark comparison and delegates to the numpy kernel in
-:mod:`libgeodesk_spark.mercator`. Use the Column version in production
-plans; both are verified equal in tests.
+The reference's tile math (include/geodesk/geom/Tile.h:47-55,230-231) is
+integer shifts and ors, so cell assignment compiles straight into
+whole-stage-codegen JVM arithmetic — zero Python in the per-row path, no
+shuffle, fully pushdown-friendly. The numpy mirror of the same math lives
+in :mod:`libgeodesk_spark.mercator`.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from libgeodesk_spark import mercator
 
@@ -95,29 +88,3 @@ def vertex_key(x: Column, y: Column) -> Column:
     return F.shiftleft(y.cast("long") + F.lit(1 << 31), 32) \
         + (x.cast("long") + F.lit(1 << 31))
 
-
-# ---------------------------------------------------------------------------
-# Arrow-batched pandas UDF variants (API parity; verified equal to Columns)
-# ---------------------------------------------------------------------------
-
-def make_cell_encode_udf(zoom: int = mercator.MAX_ZOOM):
-    @F.pandas_udf(T.LongType())
-    def cell_encode(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(mercator.cell_id(x.to_numpy(), y.to_numpy(), zoom))
-    return cell_encode
-
-
-def make_project_udf():
-    """(lon, lat) -> struct<x:long, y:long> — batched Mercator projection."""
-    schema = T.StructType([
-        T.StructField("x", T.LongType()),
-        T.StructField("y", T.LongType()),
-    ])
-
-    @F.pandas_udf(schema)
-    def project(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame({
-            "x": mercator.np_x_from_lon(lon.to_numpy()),
-            "y": mercator.np_y_from_lat(lat.to_numpy()),
-        })
-    return project

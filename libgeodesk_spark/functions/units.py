@@ -53,6 +53,3 @@ def meters_col_to_unit(col: Column, unit: str) -> Column:
     """Column variant: meters expression → requested unit."""
     return col * F.lit(METERS_TO_UNIT[unit_from_string(unit)])
 
-
-def unit_col_to_meters(col: Column, unit: str) -> Column:
-    return col * F.lit(UNITS_TO_METERS[unit_from_string(unit)])

@@ -8,14 +8,13 @@
   (6, alpha dropped) at bit depth 8 — i.e. the PNGs external tools
   actually write round-trip here, and blobs written here open in any
   external viewer. Interlace / palette / 16-bit raise the honest
-  NotImplementedError (same boundary policy as compressed audio).
-  Legacy ``FPNG`` blobs still decode.
+  NotImplementedError.
 * ``bmp``  — REAL spec-level Windows BMP (since r5): BITMAPFILEHEADER +
   BITMAPINFOHEADER, 24-bit BI_RGB, BGR rows bottom-up padded to 4-byte
   stride. Decode also accepts 32-bit (BGRA, alpha dropped), top-down
   (negative height) rows, and any info-header ≥ 40 bytes (V4/V5) —
   the BMPs external tools actually write. Palette / RLE / 16-bit raise
-  the honest NotImplementedError. Legacy ``FBMP`` blobs still decode.
+  the honest NotImplementedError.
 * ``jpeg`` — uniform quantization (step Q=6) + zlib (LOSSY: decoded pixels
   differ from the source; PSNR ≈ 43 dB > the 40 dB gate), mirroring a
   quality-ladder JPEG in spirit: encode is deterministic and idempotent
@@ -41,8 +40,12 @@ sequential data dependency the spec imposes; our own blobs are filter 0
 and stay vectorized.)
 
 Private container format (little-endian):
-  magic[4] = b'FJPG', then uint16 w, uint16 h, uint8 q, then payload
-  bytes (b'FBMP'/b'FPNG' are the legacy decode-only equivalents).
+  magic[4] = b'FJPG', then uint16 w, uint16 h, uint8 q, then the zlib
+  stream of the quantized RGB pixels.
+
+Every inflate is bounded by the size its header declares: dimensions
+are checked against ``MAX_DIM`` first, and a stream whose inflated size
+differs from the declared one raises ValueError (``_inflate``).
 """
 
 from __future__ import annotations
@@ -52,15 +55,11 @@ import zlib
 
 import numpy as np
 
-MAGIC_BMP = b"FBMP"          # legacy private container (decode-only)
-MAGIC_PNG = b"FPNG"          # legacy private container (decode-only)
 MAGIC_JPG = b"FJPG"
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 BMP_SIG = b"BM"
 
 JPEG_Q = 6  # quantization step -> MSE ~ (Q^2-1)/12 ~ 2.9 -> PSNR ~ 43.5 dB
-
-FORMATS = ("png", "jpeg", "bmp")
 
 #: C-kernel dimension bound (also the pure decoder's sanity guard):
 #: the engine's own tiles are <= 64 px; anything past 2^15 per axis is a
@@ -234,6 +233,17 @@ def _png_defilter(raw: bytes, w: int, h: int, bpp: int) -> np.ndarray:
     return px[:, :, :3] if bpp == 4 else px
 
 
+def _inflate(buf, expected: int, what: str) -> bytes:
+    """Inflate at most ``expected + 1`` bytes: a stream whose output is
+    not exactly the size its header declares raises ValueError without
+    ever holding more than that (a decompression bomb costs its declared
+    size, not its inflated size)."""
+    raw = zlib.decompressobj().decompress(buf, expected + 1)
+    if len(raw) != expected:
+        raise ValueError(f"{what} data length {len(raw)} != {expected}")
+    return raw
+
+
 def decode_png(data: bytes) -> np.ndarray:
     """Parse a real PNG: chunk walk with CRC verification, IDAT concat,
     defilter. RGB/RGBA bit-depth-8 non-interlaced only (the honest
@@ -273,9 +283,11 @@ def decode_png(data: bytes) -> np.ndarray:
             break
     if w is None or not idat:
         raise ValueError("PNG missing IHDR/IDAT")
+    if not (0 < w <= MAX_DIM and 0 < h <= MAX_DIM):
+        raise ValueError(f"PNG dimensions {w}x{h} out of range")
     bpp = 4 if color == 6 else 3
-    raw = zlib.decompress(idat[0] if len(idat) == 1
-                          else b"".join(idat))
+    raw = _inflate(idat[0] if len(idat) == 1 else b"".join(idat),
+                   h * (1 + w * bpp), "PNG")
     return _png_defilter(raw, w, h, bpp)
 
 
@@ -318,8 +330,8 @@ def decode_bmp(data: bytes) -> np.ndarray:
             f"BMP bpp={bpp} compression={comp}: only uncompressed "
             f"24/32-bit BI_RGB decodes here (no palette/RLE/16-bit)")
     top_down, h = hh < 0, abs(hh)
-    # dimension guard (same policy as decode_avi: out-of-range dims raise
-    # instead of decoding to an empty/absurd array — ADVICE r5)
+    # dimension guard (same policy as the PNG and FJPG decoders):
+    # out-of-range dims raise instead of decoding to an absurd array
     if not (0 < w <= MAX_DIM and 0 < h <= MAX_DIM):
         raise ValueError(f"BMP dimensions {w}x{hh} out of range")
     nch = bpp // 8
@@ -418,22 +430,16 @@ def decode(data: bytes) -> tuple[np.ndarray, str]:
                     return px, "bmp"
         return decode_bmp(data), "bmp"
     magic = bytes(data[:4])
-    if magic == MAGIC_BMP:          # legacy private container
-        w, h = struct.unpack("<HH", bytes(data[4:8]))
-        px = np.frombuffer(data, dtype=np.uint8, offset=8).reshape(h, w, 3)
-        return px, "bmp"
-    if magic == MAGIC_PNG:          # legacy private container
-        w, h = struct.unpack("<HH", bytes(data[4:8]))
-        raw = zlib.decompress(bytes(data[8:]))
-        return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3), "png"
     if magic == MAGIC_JPG:
         w, h, _q = struct.unpack("<HHB", bytes(data[4:9]))
-        if (lib is not None and 0 < w <= MAX_DIM and 0 < h <= MAX_DIM):
+        if not (w <= MAX_DIM and h <= MAX_DIM):
+            raise ValueError(f"FJPG dimensions {w}x{h} out of range")
+        if lib is not None and w > 0 and h > 0:
             px = np.empty((h, w, 3), dtype=np.uint8)
             if lib.fjpg_decode(data, len(data), px.ctypes.data,
                                px.size) == 0:
                 return px, "jpeg"
-        raw = zlib.decompress(bytes(data[9:]))
+        raw = _inflate(bytes(data[9:]), w * h * 3, "FJPG")
         return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3), "jpeg"
     raise ValueError(f"bad magic {magic!r}")
 

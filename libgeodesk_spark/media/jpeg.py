@@ -1,9 +1,9 @@
 """Baseline JPEG/JFIF codec — spec-level ITU-T T.81, dependency-free.
 
-Counterpart of the real PNG/BMP/WAV/AVI codecs (media/codec.py,
-media/multimodal.py): the dominant *lossy* training-data image format,
-implemented straight from the public spec so blobs written here open in
-any external viewer and externally-produced baseline JPEGs decode here.
+Counterpart of the real PNG/BMP codecs (media/codec.py): the dominant
+*lossy* training-data image format, implemented straight from the public
+spec so blobs written here open in any external viewer and
+externally-produced baseline JPEGs decode here.
 
 Scope (the honest boundary, same policy as the other codecs):
 

@@ -3,14 +3,13 @@ typed metadata, processed in Arrow batches.
 
 Codec tiers (dispatch on container magic):
 
-* **REAL, dependency-free**: RIFF/WAVE PCM audio (:func:`decode_wav`),
-  FLAC lossless compressed audio (media/flac.py, RFC 9639), and
-  RIFF/AVI video (:func:`decode_avi`) in both uncompressed-DIB and
+* **REAL, dependency-free**: RIFF/WAVE PCM audio (:func:`decode_wav`)
+  and RIFF/AVI video (:func:`decode_avi`) in both uncompressed-DIB and
   Motion-JPEG forms (one real baseline JPEG per frame, media/jpeg.py) —
   full spec-level parsers, no external library.
 * **Deterministic fakes** (FAUD/FVID): procedural payloads for gates and
   benches.
-* **Stubbed**: LOSSY compressed formats (mp3/ogg · h264/vp9) raise a
+* **Stubbed**: compressed formats (FLAC/mp3/ogg · h264/vp9) raise a
   clearly-marked ``NotImplementedError`` — they need libsndfile/ffmpeg,
   absent from this container (``REAL_CODECS`` is the future hook).
   Swapping one in means replacing one decode function, not
@@ -54,9 +53,9 @@ MAGIC_AUD = b"FAUD"
 MAGIC_VID = b"FVID"
 
 REAL_CODECS = False   # flip when libsndfile/ffmpeg-class decoders exist
-                      # (WAV/RIFF PCM + FLAC + uncompressed AVI are
-                      # always real — parsed here, dependency-free; the
-                      # flag gates lossy mp3/ogg audio + h264/vp9 video)
+                      # (WAV/RIFF PCM + AVI are always real — parsed
+                      # here, dependency-free; the flag gates compressed
+                      # FLAC/mp3/ogg audio + h264/vp9 video)
 
 
 # -- REAL container: WAV (RIFF) PCM — dependency-free ------------------------
@@ -158,22 +157,18 @@ def encode_audio(samples: np.ndarray, sample_rate: int) -> bytes:
 
 def decode_audio(data: bytes) -> tuple[np.ndarray, int]:
     """Container-dispatching audio decode: real RIFF/WAVE PCM decodes
-    via :func:`decode_wav` and real FLAC via :func:`flac.decode_flac`
-    (both spec-level, no stub, no dependency); the deterministic fake
-    container (MAGIC_AUD) stays for gates; anything else (mp3/ogg) is
-    the remaining REAL_CODECS stub."""
+    via :func:`decode_wav` (spec-level, no dependency); the
+    deterministic fake container (MAGIC_AUD) stays for gates; anything
+    else (FLAC/mp3/ogg) is the REAL_CODECS stub."""
     head = bytes(data[:4])
     if head == b"RIFF":
         return decode_wav(data)
-    if head == b"fLaC":
-        from libgeodesk_spark.media.flac import decode_flac
-        return decode_flac(data)
     if head == MAGIC_AUD:
         sr, n, _ch = struct.unpack("<IIH", bytes(data[4:14]))
         q = np.frombuffer(zlib.decompress(bytes(data[14:])), dtype=np.int16)
         return (q.astype(np.float32) / 32767.0)[:n], sr
     raise NotImplementedError(
-        "lossy compressed audio (mp3/ogg) requires libsndfile/ffmpeg — "
+        "compressed audio (FLAC/mp3/ogg) requires libsndfile/ffmpeg — "
         "not in this container (REAL_CODECS gate)")
 
 
@@ -448,30 +443,3 @@ def sample_frames(df: DataFrame, every_n: int = 4) -> DataFrame:
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
     return df.mapInPandas(sample, schema=out_schema)
-
-
-def resize_images(df: DataFrame, target: int = 16,
-                  bytes_col: str = "bytes") -> DataFrame:
-    """Nearest-neighbor resize of image payloads to target×target (the
-    resize UDF shape; schema preserved, fmt preserved)."""
-    from libgeodesk_spark.media import codec
-    schema = df.schema
-
-    def rs(batches):
-        for pdf in batches:
-            out = []
-            for blob in pdf[bytes_col]:
-                px, fmt = codec.decode(blob)
-                h, w = px.shape[:2]
-                yi = (np.arange(target) * h // target)
-                xi = (np.arange(target) * w // target)
-                out.append(codec.encode(px[yi][:, xi], fmt))
-            pdf = pdf.copy()
-            pdf[bytes_col] = out
-            if "w" in pdf.columns:
-                pdf["w"] = np.int32(target)
-            if "h" in pdf.columns:
-                pdf["h"] = np.int32(target)
-            yield pdf
-
-    return df.mapInPandas(rs, schema=schema)

@@ -35,8 +35,6 @@ MAX_LAT = 85.0511287
 MIN_Y = -(2**31)
 MAX_Y = 2**31 - 2
 
-#: Default zoom pyramid (reference ZoomLevels.h DEFAULT = 0b1010101010101).
-DEFAULT_ZOOM_LEVELS = (0, 2, 4, 6, 8, 10, 12)
 MAX_ZOOM = 12
 
 
@@ -113,10 +111,6 @@ def np_lon_from_x(x: np.ndarray) -> np.ndarray:
 def np_lat_from_y(y: np.ndarray) -> np.ndarray:
     return (np.arctan(np.exp(np.asarray(y, dtype=np.float64) * np.pi * 2.0 / MAP_WIDTH))
             * 360.0 / np.pi - 90.0)
-
-
-def np_scale_at_y(y: np.ndarray) -> np.ndarray:
-    return np.cosh(np.asarray(y, dtype=np.float64) * 2.0 * np.pi / MAP_WIDTH)
 
 
 # ---------------------------------------------------------------------------

@@ -329,8 +329,7 @@ KNN_SALT_MIN_CELL = 32_768
 def knn_join(points: DataFrame, k: int, id_col: str = "pid",
              x_col: str = "x", y_col: str = "y",
              queries: DataFrame | None = None,
-             g0: int = 64, max_rounds: int = 30,
-             verbose: bool = False) -> DataFrame:
+             g0: int = 64, max_rounds: int = 30) -> DataFrame:
     """Exact kNN join via multi-resolution grid doubling.
 
     (id_a, id_b, d2, rank): for every query point, its ``k`` nearest
@@ -570,10 +569,6 @@ def knn_join(points: DataFrame, k: int, id_col: str = "pid",
             break
         active = active.join(resolved.select("id_a"), "id_a", "left_anti") \
             .localCheckpoint(eager=True)
-        if verbose:
-            import time as _t
-            print(f"knn_join round={rnd} g={g} active_left={active.count()}"
-                  f" t={_t.time():.0f}", flush=True)
         if active.isEmpty():
             nxt = pending.filter(F.col("rstart") > rnd) \
                 .agg(F.min("rstart")).first()[0]

@@ -217,7 +217,7 @@ def _cogroup_refiner(edges: DataFrame, locate) -> Refiner:
 
 def join_zones(points: DataFrame, zones: list[PreparedZone],
                predicate: Predicate = "within",
-               cell_col: str = "cell_id", x_col: str = "x", y_col: str = "y",
+               x_col: str = "x", y_col: str = "y",
                prefilter_bbox: bool = True,
                columns: list[str] | None = None) -> DataFrame:
     """points × zones point-in-polygon join over driver-held

@@ -41,6 +41,14 @@ METRICS_SCHEMA = T.StructType([
 ])
 
 
+def _caption_sha(captions) -> str:
+    """sha256 hex over ``captions`` in the given order, each followed by
+    a NUL byte: the per-(cell, fmt) ``caption_sha`` of every metrics
+    path, so the split and single-pass formulations stay byte-equal."""
+    return hashlib.sha256(
+        "".join([c + "\x00" for c in captions]).encode("utf-8")).hexdigest()
+
+
 def reencode_images(images: DataFrame, target_fmt: str | None = None) -> DataFrame:
     """Re-encode every image payload (same format unless target_fmt).
     Stateless mapInPandas — no shuffle; schema preserved."""
@@ -87,8 +95,7 @@ def tile_reencode_metrics(images: DataFrame, salt_hot: bool = False) -> DataFram
             bytes_in = 0
             bytes_out = 0
             min_psnr = float("inf")
-            sha = hashlib.sha256()
-            for blob, cap in zip(grp["bytes"], grp["caption"]):
+            for blob in grp["bytes"]:
                 px, f = codec.decode(blob)
                 out = codec.encode(px, f)
                 px2, _ = codec.decode(out)
@@ -96,8 +103,6 @@ def tile_reencode_metrics(images: DataFrame, salt_hot: bool = False) -> DataFram
                 min_psnr = min(min_psnr, p)
                 bytes_in += len(blob)
                 bytes_out += len(out)
-                sha.update(cap.encode("utf-8"))
-                sha.update(b"\x00")
             rows.append({
                 "cell_id": int(pdf["cell_id"].iloc[0]),
                 "fmt": fmt,
@@ -105,7 +110,7 @@ def tile_reencode_metrics(images: DataFrame, salt_hot: bool = False) -> DataFram
                 "bytes_in": bytes_in,
                 "bytes_out": bytes_out,
                 "min_psnr": 999.0 if min_psnr == float("inf") else min_psnr,
-                "caption_sha": sha.hexdigest(),
+                "caption_sha": _caption_sha(grp["caption"]),
             })
         return pd.DataFrame(rows, columns=[f.name for f in METRICS_SCHEMA.fields])
 
@@ -153,13 +158,11 @@ def _synth_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
         sel = order[ordered_codes == code]
         if not sel.size:
             continue
-        sha = hashlib.sha256()
-        upd = sha.update
+        sel_pids = pids[sel].tolist()
         bytes_in = 0
         bytes_out = 0
         min_psnr = float("inf")
-        for pid, w, h in zip(pids[sel].tolist(), ws[sel].tolist(),
-                             hs[sel].tolist()):
+        for pid, w, h in zip(sel_pids, ws[sel].tolist(), hs[sel].tolist()):
             if lib is not None:
                 # fused C leg: same encode->decode->re-encode->decode->
                 # compare work, only the metrics cross the boundary
@@ -177,8 +180,6 @@ def _synth_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
                         min_psnr = p
                     bytes_in += res[0]
                     bytes_out += res[1]
-                    upd(caption_for(pid).encode("utf-8"))
-                    upd(b"\x00")
                     continue
             blob = enc(synth(pid, w, h), fmt)
             px, f = dec(blob)
@@ -189,8 +190,6 @@ def _synth_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
                 min_psnr = p
             bytes_in += len(blob)
             bytes_out += len(out)
-            upd(caption_for(pid).encode("utf-8"))
-            upd(b"\x00")
         rows.append({
             "cell_id": int(pdf["cell_id"].iloc[0]),
             "fmt": fmt,
@@ -198,7 +197,7 @@ def _synth_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
             "bytes_in": bytes_in,
             "bytes_out": bytes_out,
             "min_psnr": 999.0 if min_psnr == float("inf") else min_psnr,
-            "caption_sha": sha.hexdigest(),
+            "caption_sha": _caption_sha(map(caption_for, sel_pids)),
         })
     return pd.DataFrame(rows, columns=[f.name for f in METRICS_SCHEMA.fields])
 
@@ -249,11 +248,6 @@ def _synth_merge_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
         for lst in grp["pids"]:
             pids.extend(lst)
         pids.sort()
-        sha = hashlib.sha256()
-        upd = sha.update
-        for pid in pids:
-            upd(caption_for(pid).encode("utf-8"))
-            upd(b"\x00")
         mn = float(grp["min_psnr_raw"].min())
         rows.append({
             "cell_id": cell,
@@ -262,7 +256,7 @@ def _synth_merge_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
             "bytes_in": int(grp["bytes_in"].sum()),
             "bytes_out": int(grp["bytes_out"].sum()),
             "min_psnr": 999.0 if mn == float("inf") else mn,
-            "caption_sha": sha.hexdigest(),
+            "caption_sha": _caption_sha(map(caption_for, pids)),
         })
     return pd.DataFrame(rows, columns=[f.name for f in METRICS_SCHEMA.fields])
 

@@ -40,14 +40,6 @@ def parents_of(membership: DataFrame, member_ids: Sequence,
             .select(member_col, rel_col).distinct())
 
 
-def members_join(membership: DataFrame, features: DataFrame,
-                 member_col: str = "member_id", feature_id: str = "id") -> DataFrame:
-    """Resolve member rows to full feature rows (the fetchTile+offset deref
-    of MemberIterator, as a join)."""
-    return membership.join(features,
-                           membership[member_col] == features[feature_id])
-
-
 def parent_ways_of_vertex(way_vertices: DataFrame, x: int, y: int,
                           way_col: str = "way_id") -> DataFrame:
     """parentWaysOf(anonymous node): all ways passing through an exact

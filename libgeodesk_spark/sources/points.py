@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 ZOOM = 12
-CELL_EXTENT = 1 << (32 - ZOOM)            # 1048576 units per zoom-12 cell
 
 X0 = 89_000_000                            # ≈ 7.46°E
 Y0 = 640_000_000                           # ≈ 47.16°N

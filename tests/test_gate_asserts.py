@@ -124,24 +124,3 @@ class TestHullInvariants:
         with pytest.raises(AssertionError, match="hull"):
             entry._q_cell_hulls(spark, SF)
 
-
-class TestAudioCodecGate:
-    def test_healthy_codecs_pass(self, spark):
-        df = entry._q_audio_codec_features(spark, SF)
-        assert df.count() == 48
-        assert df.columns == ["clip_id", "rms_ppm", "zero_crossings",
-                              "duration_ms"]
-
-    def test_feature_drift_trips_the_gate(self, spark, monkeypatch):
-        """An off-by-one in any codec's decoded features must raise, not
-        return a quiet wrong row."""
-        from libgeodesk_spark.media import multimodal as mm
-
-        real = mm.audio_features
-
-        def off_by_one(df):
-            return real(df).withColumn("rms_ppm", F.col("rms_ppm") + 1)
-
-        monkeypatch.setattr(mm, "audio_features", off_by_one)
-        with pytest.raises(AssertionError, match="audio gate"):
-            entry._q_audio_codec_features(spark, SF)

@@ -268,15 +268,6 @@ class TestPlumbing:
         f4, _ = codec.decode(bytes(vid0.iloc[1].frame_png))
         assert np.array_equal(f4, src[4])
 
-    def test_resize(self, spark):
-        from libgeodesk_spark.sources.images import images_table
-        img = images_table(spark, "/root/testdata/sf0.001").limit(20)
-        small = mm.resize_images(img, target=8).toPandas()
-        assert (small.w == 8).all() and (small.h == 8).all()
-        for blob, fmt in zip(small["bytes"], small.fmt):
-            px, f = codec.decode(bytes(blob))
-            assert f == fmt and px.shape == (8, 8, 3)
-
 
 class TestMjpegAvi:
     """Motion-JPEG AVI: real compressed video from the package's own

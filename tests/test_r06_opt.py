@@ -305,26 +305,6 @@ class TestAdviceR5Fixes:
         got = _jpeg.decode_jpeg(bytes(out))
         assert np.array_equal(got, want)
 
-    def test_flac_frame_bits_override_rejected(self):
-        from libgeodesk_spark.media import flac as _flac
-        rng = np.random.default_rng(3)
-        pcm = rng.integers(-1000, 1000, size=(4096, 1), dtype=np.int16) \
-            .astype(np.float32) / 32767.0
-        blob = bytearray(_flac.encode_flac(pcm[:, 0], 44100))
-        # locate the first frame (sync 0xFFF8..) after metadata and force
-        # its sample-size code to 8-bit (code 0b001 in header bits 12-14
-        # of byte 3: bits [3:1] of the 4th byte)
-        i = 4
-        while i + 1 < len(blob) and not (blob[i] == 0xFF
-                                         and (blob[i + 1] & 0xFC) == 0xF8):
-            i += 1
-        assert i + 3 < len(blob), "no frame sync found"
-        b3 = blob[i + 3]
-        blob[i + 3] = (b3 & ~0x0E) | (0b001 << 1)  # ss_code = 1 (8-bit)
-        with pytest.raises(ValueError,
-                           match="sample size|CRC-8"):
-            _flac.decode_flac(bytes(blob))
-
 
 class TestSynthSplitMerge:
     def test_split_path_equals_single_pass(self, spark, sf_dir):

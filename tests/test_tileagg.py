@@ -7,6 +7,15 @@ import pytest
 from libgeodesk_spark.media import codec
 
 
+@pytest.fixture(scope="module")
+def zlib_bomb():
+    """~32 KB zlib stream of 32 MiB of zeros."""
+    import zlib
+    z = zlib.compressobj(9)
+    zeros = bytes(1 << 20)
+    return b"".join([z.compress(zeros) for _ in range(32)] + [z.flush()])
+
+
 class TestCodec:
     def test_lossless_roundtrip(self):
         px = codec.synth_pixels(42, 32, 16)
@@ -35,6 +44,51 @@ class TestCodec:
         b = a.copy()
         b[0, 0, 0] = 255
         assert 0 < codec.psnr(a, b) < 40
+
+    @pytest.mark.parametrize("magic", [b"FBMP", b"FPNG"])
+    def test_legacy_containers_rejected(self, magic):
+        """The decode-only FBMP/FPNG containers are gone: their blobs
+        raise instead of decoding."""
+        import struct
+        import zlib
+        px = codec.synth_pixels(77, 12, 5)
+        body = px.tobytes() if magic == b"FBMP" else zlib.compress(
+            px.tobytes(), 6)
+        with pytest.raises(ValueError, match="bad magic"):
+            codec.decode(magic + struct.pack("<HH", 12, 5) + body)
+
+    @pytest.mark.parametrize("kernel", ["c", "pure"])
+    @pytest.mark.parametrize("fmt", ["png", "jpeg"])
+    def test_inflate_bomb_raises_before_allocating(self, monkeypatch,
+                                                   zlib_bomb, fmt, kernel):
+        """A small stream that inflates far past the 4x4 RGB its header
+        declares raises ValueError while holding no more than the
+        declared size, on the C-kernel and the pure path alike."""
+        import struct
+        import tracemalloc
+        import zlib
+        if fmt == "png":
+            def chunk(t, p):
+                return (struct.pack(">I", len(p)) + t + p
+                        + struct.pack(">I", zlib.crc32(t + p) & 0xFFFFFFFF))
+            blob = (b"\x89PNG\r\n\x1a\n"
+                    + chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 4, 8, 2,
+                                                 0, 0, 0))
+                    + chunk(b"IDAT", zlib_bomb) + chunk(b"IEND", b""))
+        else:
+            blob = b"FJPG" + struct.pack("<HHB", 4, 4, codec.JPEG_Q) \
+                + zlib_bomb
+        codec._fc()                       # load the kernel outside the trace
+        if kernel == "pure":
+            monkeypatch.setattr(codec, "_fc", lambda: None)
+        tracemalloc.start()
+        try:
+            with pytest.raises(ValueError):
+                codec.decode(blob)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 2 << 20, f"peak {peak} B while rejecting the bomb"
 
 
 def _ext_png(px: np.ndarray, filters: list[int], color: int = 2,
@@ -147,15 +201,6 @@ class TestRealPng:
         with pytest.raises(NotImplementedError, match="palette|RGB"):
             codec.decode(pal)
 
-    def test_legacy_fpng_still_decodes(self):
-        import struct
-        import zlib
-        px = codec.synth_pixels(77, 12, 5)
-        legacy = (b"FPNG" + struct.pack("<HH", 12, 5)
-                  + zlib.compress(px.tobytes(), 6))
-        got, fmt = codec.decode(legacy)
-        assert fmt == "png" and np.array_equal(got, px)
-
 
 def _ext_bmp(px: np.ndarray, bpp: int = 24, top_down: bool = False,
              hdr_size: int = 40) -> bytes:
@@ -245,13 +290,6 @@ class TestRealBmp:
         core[14:18] = (12).to_bytes(4, "little")     # BITMAPCOREHEADER
         with pytest.raises(NotImplementedError, match="core header"):
             codec.decode(bytes(core))
-
-    def test_legacy_fbmp_still_decodes(self):
-        import struct
-        px = codec.synth_pixels(31, 10, 6)
-        legacy = b"FBMP" + struct.pack("<HH", 10, 6) + px.tobytes()
-        got, fmt = codec.decode(legacy)
-        assert fmt == "bmp" and np.array_equal(got, px)
 
 
 @pytest.fixture(scope="module")

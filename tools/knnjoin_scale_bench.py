@@ -30,7 +30,7 @@ def main():
     pts.persist().count()
     n = pts.count()
     t0 = time.time()
-    out = knn_join(pts, k, verbose=True)
+    out = knn_join(pts, k)
     rows = out.count()
     wall = round(time.time() - t0, 2)
     assert rows == n * k, (rows, n, k)
