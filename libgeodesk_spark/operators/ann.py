@@ -879,10 +879,11 @@ def ivfpq_topk(emb: DataFrame, query_ids: list[int], k: int,
     # the shortlist is BOUNDED at |queries| × shortlist rows but carries
     # no stats (window over mapInPandas), so past the auto-broadcast
     # threshold Spark would pick a SortMergeJoin and SHUFFLE THE WHOLE
-    # CORPUS just to fetch the shortlisted vectors (caught by the plan
-    # assert in tools/ivfpq_scale_bench.py at 10⁶×256-d). Broadcast the
-    # skinny side explicitly: the fetch stays a corpus-side-stationary
-    # BroadcastHashJoin at any corpus size.
+    # CORPUS just to fetch the shortlisted vectors (first seen at
+    # 10⁶×256-d). Broadcast the skinny side explicitly: the fetch stays a
+    # corpus-side-stationary BroadcastHashJoin at any corpus size
+    # (tests/test_plan_invariants.py plans the IVF-PQ queries with
+    # auto-broadcast off to pin it).
     cand = emb.select(id_col, vec_col).join(F.broadcast(short), id_col) \
         .join(F.broadcast(qrows_df), "qid")
     d2 = quantized_sq_l2(F.col("qe"), F.col(vec_col)).alias("d2")

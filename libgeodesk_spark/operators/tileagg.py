@@ -117,9 +117,12 @@ def tile_reencode_metrics(images: DataFrame, salt_hot: bool = False) -> DataFram
     return images.groupBy(*keys).applyInPandas(agg, schema=METRICS_SCHEMA)
 
 
-def _synth_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-(cell, salt) group body of :func:`synth_reencode_metrics` —
-    module-level so the loop is unit-testable and keeps warm module
+def _synth_fmt_metrics(pdf: pd.DataFrame):
+    """Codec pass shared by the single-pass and split bodies of
+    :func:`synth_reencode_metrics`: yields ``(fmt, pids, bytes_in,
+    bytes_out, min_psnr)`` per format in name order, ``pids`` ascending
+    and ``min_psnr`` raw (``inf`` when every re-encode is exact).
+    Module-level so the loop is unit-testable and keeps warm module
     state across reused Python workers.
 
     r6 loop shape (same outputs, less per-image Python): fmt_for/size_for
@@ -128,10 +131,9 @@ def _synth_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
     per-fmt image order comes from an int64 argsort of pid, which equals
     the image_id string order because image_id is 'img%012d' % pid in
     this synthetic table (captions are likewise derived from pid)."""
-    from libgeodesk_spark.sources.images import SIZES, caption_for
+    from libgeodesk_spark.sources.images import SIZES
 
     size_lut = np.asarray(SIZES, dtype=np.int64)
-    rows = []
     # numpy views once — .iloc per element costs microseconds/row,
     # which is real money at 10^5 rows/partition
     pids = pdf["pid"].to_numpy().astype("int64")
@@ -190,15 +192,23 @@ def _synth_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
                 min_psnr = p
             bytes_in += len(blob)
             bytes_out += len(out)
-        rows.append({
-            "cell_id": int(pdf["cell_id"].iloc[0]),
-            "fmt": fmt,
-            "n_images": len(sel),
-            "bytes_in": bytes_in,
-            "bytes_out": bytes_out,
-            "min_psnr": 999.0 if min_psnr == float("inf") else min_psnr,
-            "caption_sha": _caption_sha(map(caption_for, sel_pids)),
-        })
+        yield fmt, sel_pids, bytes_in, bytes_out, min_psnr
+
+
+def _synth_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Per-(cell, salt) group body of :func:`synth_reencode_metrics` in
+    its single-pass regime: the codec pass plus each format's
+    caption_sha."""
+    from libgeodesk_spark.sources.images import caption_for
+    cell = int(pdf["cell_id"].iloc[0])
+    rows = [{"cell_id": cell,
+             "fmt": fmt,
+             "n_images": len(pids),
+             "bytes_in": bytes_in,
+             "bytes_out": bytes_out,
+             "min_psnr": 999.0 if mn == float("inf") else mn,
+             "caption_sha": _caption_sha(map(caption_for, pids))}
+            for fmt, pids, bytes_in, bytes_out, mn in _synth_fmt_metrics(pdf)]
     return pd.DataFrame(rows, columns=[f.name for f in METRICS_SCHEMA.fields])
 
 
@@ -218,21 +228,20 @@ def _synth_partial_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
     """Sub-group codec pass of :func:`synth_reencode_metrics`: the full
     per-image synth→encode→decode→re-encode→decode→compare work for one
     (cell, salt, subkey) slice; emits associative partials plus the
-    slice's pid list (captions derive from pid, so the tiny merge stage
-    can rebuild the exact caption_sha without touching any payload)."""
-    full = _synth_group_metrics(pdf)
-    pids = pdf["pid"].to_numpy().astype("int64")
-    r10 = pids % 10
-    out = full.rename(columns={"min_psnr": "min_psnr_raw"})
-    out.insert(1, "salt", int(pdf["salt"].iloc[0]))
-    # undo the inf->999 mapping: merge needs the raw minimum
-    out["min_psnr_raw"] = out["min_psnr_raw"].map(
-        lambda v: float("inf") if v == 999.0 else v)
-    by_fmt = {"png": pids[r10 < 4], "jpeg": pids[(r10 >= 4) & (r10 < 8)],
-              "bmp": pids[r10 >= 8]}
-    out.pop("caption_sha")
-    out["pids"] = [by_fmt[f].tolist() for f in out["fmt"]]
-    return out[[f.name for f in _PARTIAL_SCHEMA.fields]]
+    slice's pid list. No caption digest here: captions derive from pid,
+    so the tiny merge stage builds the exact caption_sha once per cell."""
+    cell = int(pdf["cell_id"].iloc[0])
+    salt = int(pdf["salt"].iloc[0])
+    rows = [{"cell_id": cell,
+             "salt": salt,
+             "fmt": fmt,
+             "n_images": len(pids),
+             "bytes_in": bytes_in,
+             "bytes_out": bytes_out,
+             "min_psnr_raw": mn,
+             "pids": pids}
+            for fmt, pids, bytes_in, bytes_out, mn in _synth_fmt_metrics(pdf)]
+    return pd.DataFrame(rows, columns=[f.name for f in _PARTIAL_SCHEMA.fields])
 
 
 def _synth_merge_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -286,8 +295,7 @@ def _estimated_input_bytes(points: DataFrame) -> int:
         return 1 << 50                      # unknown -> assume large
 
 
-def synth_reencode_metrics(points: DataFrame,
-                           split: int | None = None) -> DataFrame:
+def synth_reencode_metrics(points: DataFrame) -> DataFrame:
     """Fused bench/pipeline variant: shuffle only skinny point rows by
     (cell_id, salt), then synthesize payloads AND compute re-encode
     metrics inside one Arrow stage — for workloads whose payloads are
@@ -302,12 +310,9 @@ def synth_reencode_metrics(points: DataFrame,
     single-pass formulation (tests/test_r06_opt.py asserts it). Small
     inputs (optimizer size estimate under SYNTH_SPLIT_MIN_BYTES) skip
     the split and the fine partitioning: their hot groups are already
-    sub-second and the two-level machinery would only add fixed costs.
-    ``split`` overrides the auto choice (1 = force single-pass)."""
+    sub-second and the two-level machinery would only add fixed costs."""
     par = points.sparkSession.sparkContext.defaultParallelism
-    if split is None:
-        big = _estimated_input_bytes(points) >= SYNTH_SPLIT_MIN_BYTES
-        split = SYNTH_SPLIT if big else 1
+    big = _estimated_input_bytes(points) >= SYNTH_SPLIT_MIN_BYTES
     # project to the three columns the codec stage reads BEFORE the
     # exchange (guide §2.3): x/y/phash/image_id would otherwise be
     # shuffled and arrow->pandas-materialized (millions of python
@@ -318,7 +323,7 @@ def synth_reencode_metrics(points: DataFrame,
     # serialize the per-group codec work; a fixed-width HashPartitioning on
     # the same keys satisfies applyInPandas' distribution requirement with
     # no extra exchange and is exempt from AQE coalescing.
-    if split <= 1:
+    if not big:
         return skinny.repartition(par * 2, "cell_id", "salt") \
             .groupBy("cell_id", "salt") \
             .applyInPandas(_synth_group_metrics, schema=METRICS_SCHEMA)
@@ -326,7 +331,7 @@ def synth_reencode_metrics(points: DataFrame,
     # seconds, fine partitions cost nothing and cut the last-wave tail
     # from ~p90-task-size to ~avg-task-size (measured 66s -> 56s at sf1;
     # task p50 was 12.5s / max 22s in 4 waves at 4 tasks/core)
-    sub = F.shiftright(F.col("pid"), 4) % split        # independent of salt
+    sub = F.shiftright(F.col("pid"), 4) % SYNTH_SPLIT  # independent of salt
     partials = (skinny.withColumn("_sub", sub)
                 .repartition(par * 16, "cell_id", "salt", "_sub")
                 .groupBy("cell_id", "salt", "_sub")

@@ -7,7 +7,6 @@ INDEPENDENT industrial codecs available in this container.
   for JPEG the two *decoders* are compared on the same stream (IDCT
   rounding is the only legal difference) and each encoder's output must
   decode cleanly in the other implementation.
-* WAV — Python's stdlib ``wave`` module (independent RIFF writer/reader).
 
 These are the strongest interchange proofs available without network
 access: streams we emit are consumed byte-for-byte by implementations we
@@ -17,12 +16,11 @@ didn't write, and vice versa. Skipped cleanly if no JDK is present.
 import shutil
 import struct
 import subprocess
-import wave as wave_mod
 
 import numpy as np
 import pytest
 
-from libgeodesk_spark.media import codec, jpeg, multimodal as mm
+from libgeodesk_spark.media import codec, jpeg
 
 JAVA_SRC = r"""
 import javax.imageio.ImageIO;
@@ -266,46 +264,3 @@ class TestJpegInterop:
         px = codec.synth_pixels(77, 24, 24)
         out, fmt = codec.decode(jenc("jpg", px, progressive=True))
         assert fmt == "jpeg_baseline" and out.shape == (24, 24, 3)
-
-
-class TestWavInterop:
-    def test_engine_wav_reads_in_stdlib(self):
-        a = mm.synth_audio(3, 4321)
-        blob = mm.encode_wav(a, 16000)
-        import io
-        with wave_mod.open(io.BytesIO(blob)) as wf:
-            assert wf.getnchannels() == 1
-            assert wf.getframerate() == 16000
-            assert wf.getsampwidth() == 2
-            frames = wf.readframes(wf.getnframes())
-        ours, sr = mm.decode_wav(blob)
-        assert np.array_equal(
-            np.frombuffer(frames, dtype="<i2"),
-            np.clip(np.rint(a * 32767), -32768, 32767).astype(np.int16))
-
-    def test_stdlib_wav_decodes_in_engine(self, tmp_path):
-        q = np.clip(np.rint(mm.synth_audio(4, 2000) * 32767),
-                    -32768, 32767).astype("<i2")
-        p = tmp_path / "std.wav"
-        with wave_mod.open(str(p), "wb") as wf:
-            wf.setnchannels(1)
-            wf.setsampwidth(2)
-            wf.setframerate(8000)
-            wf.writeframes(q.tobytes())
-        s, sr = mm.decode_wav(p.read_bytes())
-        assert sr == 8000
-        assert np.array_equal((s * 32767).round().astype(np.int16), q)
-
-    def test_stereo_stdlib_wav(self, tmp_path):
-        a = np.stack([mm.synth_audio(5, 1500), mm.synth_audio(6, 1500)],
-                     axis=1)
-        q = np.clip(np.rint(a * 32767), -32768, 32767).astype("<i2")
-        p = tmp_path / "st.wav"
-        with wave_mod.open(str(p), "wb") as wf:
-            wf.setnchannels(2)
-            wf.setsampwidth(2)
-            wf.setframerate(44100)
-            wf.writeframes(np.ascontiguousarray(q).tobytes())
-        s, sr = mm.decode_wav(p.read_bytes())
-        assert sr == 44100 and s.shape == (1500, 2)
-        assert np.array_equal((s * 32767).round().astype(np.int16), q)

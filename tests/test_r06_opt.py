@@ -307,9 +307,11 @@ class TestAdviceR5Fixes:
 
 
 class TestSynthSplitMerge:
-    def test_split_path_equals_single_pass(self, spark, sf_dir):
+    def test_split_path_equals_single_pass(self, spark, sf_dir,
+                                           monkeypatch):
         """The two-level (partial + merge) formulation must emit rows
         byte-identical to one applyInPandas group per (cell, salt)."""
+        from libgeodesk_spark.operators import tileagg
         from libgeodesk_spark.operators.tileagg import (
             METRICS_SCHEMA,
             _synth_group_metrics,
@@ -319,7 +321,8 @@ class TestSynthSplitMerge:
         pts = derived_points(spark, sf_dir)
         # force the split regime (the auto heuristic would pick
         # single-pass at gate scale, which is the comparison baseline)
-        split = synth_reencode_metrics(pts, split=8).toPandas() \
+        monkeypatch.setattr(tileagg, "SYNTH_SPLIT_MIN_BYTES", 0)
+        split = synth_reencode_metrics(pts).toPandas() \
             .sort_values(["cell_id", "fmt", "caption_sha"]).reset_index(drop=True)
         single = (pts.repartition(8, "cell_id", "salt")
                   .groupBy("cell_id", "salt")
@@ -329,6 +332,31 @@ class TestSynthSplitMerge:
         # per (cell, salt, fmt) rows: compare the full aggregate multiset
         assert len(split) == len(single)
         pd.testing.assert_frame_equal(split, single)
+
+    def test_partial_slice_builds_no_caption(self, monkeypatch):
+        """A split slice emits pid lists, not digests: the merge stage
+        builds each caption_sha once, so the codec pass over a slice
+        must not render a single caption."""
+        from libgeodesk_spark.operators import tileagg
+        from libgeodesk_spark.sources import images
+        calls = []
+
+        def counting(pid):
+            calls.append(pid)
+            return caption_for(pid)
+
+        monkeypatch.setattr(images, "caption_for", counting)
+        pids = np.arange(40, 57, dtype="int64")
+        pdf = pd.DataFrame({"pid": pids,
+                            "cell_id": np.full(pids.size, 201327826),
+                            "salt": np.full(pids.size, 3)})
+        partial = tileagg._synth_partial_metrics(pdf)
+        assert calls == []
+        assert partial["n_images"].sum() == pids.size
+        # merged alone, the slice reproduces the single-pass rows
+        merged = tileagg._synth_merge_metrics(partial)
+        pd.testing.assert_frame_equal(
+            merged, tileagg._synth_group_metrics(pdf))
 
 
 class TestSynthGroupMetrics:

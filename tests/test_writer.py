@@ -1,6 +1,8 @@
 """Storage layout tests: partition pruning is visible in the plan, window
 scans are exact, Morton clustering orders within partitions."""
 
+import re
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -30,9 +32,14 @@ def test_roundtrip_and_pruned_scan(spark, sf_dir, tmp_path):
     # pruning shows in the physical plan: PartitionFilters on part_cell
     plan = scan_window(back, *window)._jdf.queryExecution() \
         .executedPlan().toString()
-    assert "part_cell" in plan
-    # and the data filters reach the scan as pushed filters
-    assert "PushedFilters" in plan
+    assert re.search(r"PartitionFilters: \[[^\]]*part_cell", plan)
+    # and the window reaches the scan as pushed filters (the plan string
+    # truncates the list before the y bounds)
+    assert re.search(r"PushedFilters: \[[^\]]*GreaterThanOrEqual\(x", plan)
+    # a kNN ring round's cell set is pushed into the scan as well
+    ring = back.filter(F.col("cell_id").isin([201927240, 201927241])) \
+        .select("image_id")._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PushedFilters: \[[^\]]*In\(cell_id", ring)
 
 
 def test_partition_count_bounded(spark, sf_dir, tmp_path):
@@ -171,7 +178,6 @@ def test_bucketed_payload_reattach(spark, sf_dir, tmp_path):
     # the bucketed layout satisfies the join distribution — in both cases
     # no "Exchange hashpartitioning(image_id" over the payload columns
     plan = joined._jdf.queryExecution().executedPlan().toString()
-    import re
     for m in re.finditer(r"Exchange hashpartitioning\(image_id[^\n]*", plan):
         frag = plan[m.start():m.start() + 2000]
         assert "bytes" not in frag.split("FileScan")[0], \
@@ -227,7 +233,6 @@ def test_category_partition_pruning(spark, sf_dir, tmp_path):
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     # fmt appears in the partition filters, pruning whole directories
-    import re
     pf = re.search(r"PartitionFilters: \[[^\]]*\]", plan).group(0)
     assert "fmt" in pf, pf
     got = sorted(r.image_id for r in q.select("image_id").collect())

@@ -3,14 +3,19 @@ Spark and its oracle_sql() on DuckDB at sf0.01, compare row count, schema
 arity, and an order-insensitive value multiset.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+Each line ends with the query's wall (Spark build plus collect), so naming
+queries times them at any scale factor; this replaces per-scenario bench
+scripts for the queries perfbench does not measure.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
