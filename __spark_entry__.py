@@ -80,29 +80,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # Spark queries
 # ---------------------------------------------------------------------------
 
-# Pinned quality floors for the approximate paths (BENCH/ANN.md measured
-# values on the seeded gate corpora; BASELINE.md PSNR north-star). The
-# rows-only gate queries SELF-ASSERT against these — the analog of the
+# Pinned re-encode fidelity floor (BASELINE.md PSNR north-star). The
+# rows-only gate queries SELF-ASSERT against it — the analog of the
 # reference's golden-dump diffing (test/Features_test.cpp:75-123): a
-# silent recall/fidelity collapse raises, so the driver records `err`
-# instead of green.
-RECALL_FLOORS_D64 = {"lsh": 92, "ivf": 94}
-RECALL_FLOORS_D256 = {"lsh": 100, "ivf": 100}
+# silent fidelity collapse raises, so the driver records `err` instead
+# of green.
 PSNR_FLOOR_DB = 40.0
-
-
-def _assert_recall_floor(df: DataFrame, floors: dict[str, int]) -> DataFrame:
-    """Raise when any method's recall@k lands under its pinned floor —
-    the metric row is tiny (one row per method), so the extra driver
-    collect is free; the returned DataFrame is unchanged."""
-    rows = {r["method"]: r["recall_pct"] for r in df.collect()}
-    for method, floor in floors.items():
-        got = rows.get(method)
-        if got is None or got < floor:
-            raise AssertionError(
-                f"ann recall gate: {method} recall@10 = {got} < pinned "
-                f"floor {floor} (BENCH/ANN.md) — approximate path regressed")
-    return df
 
 
 def _points(spark, sf_dir):
@@ -229,7 +212,7 @@ def _q_orders_by_segment(spark, sf_dir):
                   .alias("total_cents")))
 
 
-# --- crossing segments (J4), cell ring, embedding near-dup -----------------
+# --- crossing segments (J4), cell ring -------------------------------------
 
 def _q_crosses(spark, sf_dir):
     """Segments (consecutive pids) that cross the comb zone boundary —
@@ -471,16 +454,6 @@ def _q_near_pairs(spark, sf_dir):
                                  id_col="pid")
 
 
-def _q_clean_corpus(spark, sf_dir):
-    """The composed training-data pipeline (operators/pipeline.py):
-    quality gate -> exact dedup keep-first -> embedding attach, one
-    Catalyst plan, oracle-mirrored end to end."""
-    from libgeodesk_spark.operators.pipeline import clean_corpus
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return clean_corpus(docs, emb)
-
-
 def _q_stream_window_counts(spark, sf_dir):
     """Event-time windowed counts with WATERMARK late-data drop, driven as
     two availableNow epochs through one checkpoint (append mode — only
@@ -716,18 +689,6 @@ def _q_stream_snapshot(spark, sf_dir):
     return tbl.read(spark).select("image_id", "pid", "cell_id")
 
 
-def _q_ann_recall_d256(spark, sf_dir):
-    """ANN recall at PRODUCTION dimension (256-d): the LSH signature
-    dispatches to the Arrow numpy-matmul path (planes x dim >
-    LSH_JVM_MAX_TERMS), IVF re-trains at the same dim — evidence the
-    approximate paths hold beyond the 64-d gate corpus. Rows-only
-    metric row (approx-path quality, like ann_recall)."""
-    from libgeodesk_spark.operators.ann import ann_recall, synth_embeddings
-    emb = synth_embeddings(spark, 2000, 256)
-    return _assert_recall_floor(ann_recall(emb, ANN_QIDS, 10, dim=256),
-                                RECALL_FLOORS_D256)
-
-
 def _q_stream_within(spark, sf_dir):
     """STREAMING point-in-polygon (streaming/ingest.stream_within):
     points arrive as two availableNow epochs; each micro-batch flows
@@ -843,48 +804,12 @@ def _q_cell_ring(spark, sf_dir):
             .groupBy("cell_id").agg(F.count("*").alias("n")))
 
 
-EMB_NEAR_THRESH = None  # set below via module constant
+# --- text / dedup / GOQL / tile-agg ----------------------------------------
 
-
-def _q_emb_near_dup(spark, sf_dir):
-    """Embedding near-duplicate pairs: exact quantized-L2 self-join below a
-    threshold (the embedding-cosine near-dup analog, exact for the gate).
-
-    r6 shape: pre-quantize once per ROW (not per pair) and prune pairs
-    with an exact first-dimension band — d2 <= D2 implies
-    |q0_a - q0_b| <= isqrt(D2), so bucketing q0 by isqrt(D2)-wide bins
-    and equi-joining on adjacent bins keeps every qualifying pair while
-    replacing the all-pairs BroadcastNestedLoopJoin with a
-    BroadcastHashJoin. Same rows, same d2 values (oracle-checked)."""
-    import math
-
-    from libgeodesk_spark.operators.ann import _quantized, quantized_sq_l2_pre
-    r = int(math.isqrt(EMB_NEAR_D2))
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = emb.select(F.col("vec_id"),
-                      _quantized(F.col("embedding")).alias("q")) \
-        .select("vec_id", "q",
-                F.floor(F.element_at(F.col("q"), 1)
-                        / F.lit(r)).cast("long").alias("bk"))
-    a = base.select(F.col("vec_id").alias("id_a"), F.col("q").alias("qa"),
-                    F.col("bk"))
-    b = base.select(
-        F.col("vec_id").alias("id_b"), F.col("q").alias("qb"),
-        F.explode(F.array(F.col("bk") - 1, F.col("bk"),
-                          F.col("bk") + 1)).alias("bk"))
-    pairs = a.join(F.broadcast(b), ["bk"]).filter(F.col("id_a") < F.col("id_b"))
-    d2 = quantized_sq_l2_pre(F.col("qa"), F.col("qb")).alias("d2")
-    return pairs.select("id_a", "id_b", d2).filter(F.col("d2") <= EMB_NEAR_D2)
-
-
-# --- text / dedup / ANN / GOQL / tile-agg ----------------------------------
-
-ANN_QIDS = [0, 1, 2, 3, 4]
 GOQL_QUERY = "*[lang=en,fr][n_chars>300]"
 # goql_tags: same selector language over a DYNAMIC map<string,string> tag
 # column (the OSM-faithful TagTable model) incl. a wildcard + absent-key
 GOQL_TAGS_QUERY = "*[lang=en,fr][n_chars>300][source=src1*][!missing]"
-EMB_NEAR_D2 = 1_300_000   # quantized units² — ~0.5% of pairs at sf0.01
 
 
 def _docs(spark, sf_dir):
@@ -919,148 +844,6 @@ def _q_minhash_lsh(spark, sf_dir):
 def _q_ngram_jaccard(spark, sf_dir):
     from libgeodesk_spark.operators.dedup import ngram_jaccard_pairs
     return ngram_jaccard_pairs(_docs(spark, sf_dir), 50)
-
-
-def _q_ann_topk(spark, sf_dir):
-    from libgeodesk_spark.operators.ann import brute_topk
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return brute_topk(emb, ANN_QIDS, 10)
-
-
-def _assert_topk_rows(df: DataFrame, k: int) -> DataFrame:
-    """Every gate query must surface a full top-k list (corpus >> k and
-    the candidate generators are tuned to never starve) — a silent
-    candidate-starvation regression (empty buckets, dead probes) fails
-    here instead of shrinking an uncheckable rows-only count."""
-    n = df.count()
-    want = len(ANN_QIDS) * k
-    if n != want:
-        raise AssertionError(
-            f"ann top-k gate: {n} rows != {want} expected "
-            f"({len(ANN_QIDS)} queries x k={k}) — candidate generation "
-            f"starved")
-    return df
-
-
-def _q_ann_ivf(spark, sf_dir):
-    from libgeodesk_spark.operators.ann import ivf_topk
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return _assert_topk_rows(ivf_topk(emb, ANN_QIDS, 10), 10)
-
-
-def _q_ann_lsh(spark, sf_dir):
-    from libgeodesk_spark.operators.ann import lsh_bucket_topk
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return _assert_topk_rows(lsh_bucket_topk(emb, ANN_QIDS, 10), 10)
-
-
-PQ_RECALL_FLOOR = 90   # measured 100 at the sf0.01 gate shape; margin for
-                       # float-reduction order in the distributed trainer
-IVFPQ_RECALL_FLOOR = 85   # measured 94 (bounded by IVF probe recall)
-
-
-def _q_ann_ivfpq(spark, sf_dir):
-    """IVF+PQ composed (the FAISS IVFPQ / trillion-vector architecture:
-    probe-pruned ADC scan over 8-byte codes, exact re-rank). Rows-only
-    + self-asserting recall floor, like the other approximate paths."""
-    from libgeodesk_spark.operators.ann import brute_topk, ivfpq_topk
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = ivfpq_topk(emb, ANN_QIDS, 10, nprobe=8, shortlist=64).persist()
-    exact = {(r["qid"], r["vec_id"])
-             for r in brute_topk(emb, ANN_QIDS, 10).collect()}
-    got = {(r["qid"], r["vec_id"]) for r in out.collect()}
-    recall = 100.0 * len(got & exact) / max(len(exact), 1)
-    if recall < IVFPQ_RECALL_FLOOR:
-        raise AssertionError(
-            f"ann_ivfpq gate: recall@10 = {recall:.0f} < floor "
-            f"{IVFPQ_RECALL_FLOOR} — probe routing or ADC regressed")
-    return _assert_topk_rows(out, 10)
-
-
-def _q_ann_ivfpq_persisted(spark, sf_dir):
-    """The 'train once, STORE, load' contract exercised end-to-end
-    (VERDICT r4 #3): IVF centroids + PQ codebooks train, round-trip
-    through a parquet quantizer artifact (ann.save_quantizer /
-    load_quantizer), and the IVF+PQ answer is built from the RELOADED
-    arrays. Self-asserting twice: the reload must be bit-exact (else
-    every stored list/code would be misrouted at scale) AND recall@10
-    must clear the same floor as the in-line-trained row."""
-    import shutil
-    import tempfile
-
-    import numpy as np
-
-    from libgeodesk_spark.operators.ann import (
-        brute_topk, ivf_centroids, ivfpq_topk, load_quantizer, pq_train,
-        save_quantizer)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    from libgeodesk_spark.operators.ann import IVF_LISTS
-    cents = ivf_centroids(emb, IVF_LISTS)
-    books = pq_train(emb, iters=3)
-    qdir = tempfile.mkdtemp(prefix="spark_graft_quant_")
-    try:
-        save_quantizer(spark, qdir + "/q", centroids=cents,
-                       codebooks=books,
-                       meta={"n_lists": IVF_LISTS, "pq": "8x8"})
-        q = load_quantizer(spark, qdir + "/q")
-        if not (np.array_equal(q["centroids"], cents)
-                and np.array_equal(q["codebooks"], books)
-                and q["meta"]["n_lists"] == IVF_LISTS):
-            raise AssertionError(
-                "ann_ivfpq_persisted gate: reloaded quantizer is not "
-                "bit-identical to the trained one")
-        out = ivfpq_topk(emb, ANN_QIDS, 10, n_lists=IVF_LISTS, nprobe=8,
-                         shortlist=64, centroids=q["centroids"],
-                         codebooks=q["codebooks"]).persist()
-        exact = {(r["qid"], r["vec_id"])
-                 for r in brute_topk(emb, ANN_QIDS, 10).collect()}
-        got = {(r["qid"], r["vec_id"]) for r in out.collect()}
-        recall = 100.0 * len(got & exact) / max(len(exact), 1)
-        if recall < IVFPQ_RECALL_FLOOR:
-            raise AssertionError(
-                f"ann_ivfpq_persisted gate: recall@10 = {recall:.0f} < "
-                f"floor {IVFPQ_RECALL_FLOOR} — reloaded quantizer "
-                f"misroutes")
-        return _assert_topk_rows(out, 10)
-    finally:
-        shutil.rmtree(qdir, ignore_errors=True)
-
-
-def _q_ann_pq(spark, sf_dir):
-    """PQ pipeline end-to-end (rows-only: ADC is float-ranked): train
-    PQ8x8 codebooks distributed, encode, ADC shortlist, exact re-rank
-    (ann.pq_topk_rerank). Self-asserting: recall@10 vs the exact brute
-    baseline must stay over PQ_RECALL_FLOOR."""
-    from libgeodesk_spark.operators.ann import (
-        brute_topk, pq_encode, pq_topk_rerank, pq_train)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = pq_train(emb, iters=3)
-    codes = pq_encode(emb, books)
-    out = pq_topk_rerank(emb, codes, books, ANN_QIDS, 10, shortlist=64) \
-        .persist()
-    exact = {(r["qid"], r["vec_id"])
-             for r in brute_topk(emb, ANN_QIDS, 10).collect()}
-    got = {(r["qid"], r["vec_id"]) for r in out.collect()}
-    recall = 100.0 * len(got & exact) / max(len(exact), 1)
-    if recall < PQ_RECALL_FLOOR:
-        raise AssertionError(
-            f"ann_pq gate: recall@10 = {recall:.0f} < floor "
-            f"{PQ_RECALL_FLOOR} — PQ shortlist/re-rank regressed")
-    return out
-
-
-def _q_ann_recall(spark, sf_dir):
-    from libgeodesk_spark.operators.ann import ann_recall
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return _assert_recall_floor(ann_recall(emb, ANN_QIDS, 10),
-                                RECALL_FLOORS_D64)
-
-
-def _q_ann_cosine(spark, sf_dir):
-    from libgeodesk_spark.operators.ann import cosine_topk
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return _assert_topk_rows(
-        cosine_topk(emb, ANN_QIDS, 10).select("qid", "vec_id", "rank"), 10)
 
 
 def _q_goql(spark, sf_dir):
@@ -1256,18 +1039,12 @@ def _q_zone_bbox(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """ORDER MATTERS: the driver's CORRECTNESS run records the FIRST 50
-    entries only. The order leads with (a) rows new or with a changed
-    implementation in round 5 (quantizer persistence; zoneprep_within
-    Spark end-to-end; real PNG under the tile gates; structural dedup
-    keys; catalog legacy reads), then (b) the rows whose newest driver
-    record was r3 (spatial/zone/GOQL/topology/stream_dedup/
-    text_features), then (c) refreshed r4 rows filling the window. The
-    remaining multi-green rows take the tail; pytest + check_oracle
-    still cover them every round. In-window boundary (position 50) =
-    ann_cosine_topk; first out-of-window row = clean_corpus."""
+    entries only. Rows whose implementation changed most recently lead,
+    then the spatial, zone, GOQL and topology rows, then streaming, tile
+    and dedup rows; pytest and check_oracle cover every entry. Position
+    50 is knn_batch; the first entry outside the window is near_pairs."""
     return {
-        # --- (a) new or implementation-changed this round -------------
-        "ann_ivfpq_persisted": _q_ann_ivfpq_persisted,  # rows-only+asserts
+        # --- most recently changed implementations --------------------
         "zoneprep_within": _q_zoneprep_within,       # now end-to-end Spark
         "tile_metrics": _q_tile_metrics,  # real PNG; rows-only + asserts
         "tile_mosaic": _q_tile_mosaic,    # real PNG; rows-only + asserts
@@ -1279,7 +1056,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "snapshot_within": _q_snapshot_within,
         "stream_snapshot": _q_stream_snapshot,
         "knn_join": _q_knn_join,                     # megacity pre-top-k
-        # --- (b) newest driver record r3: lead the refresh ------------
+        # --- spatial, zone, GOQL, topology ----------------------------
         "intersects_comb": _q_intersects("comb"),
         "contains_point": _q_contains_point,
         "knn_k5": _q_knn(5),
@@ -1305,32 +1082,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zorder_key": _q_zorder,
         "stream_dedup": _q_stream_dedup,
         "text_features": _q_text_features,
-        # --- (c) r4-recorded rows refreshed inside the window ---------
+        # --- streaming, tiles, dedup, to the end of the window --------
         "stream_within": _q_stream_within,
-        "ann_ivfpq_topk": _q_ann_ivfpq,   # rows-only + recall floor
-        "ann_recall": _q_ann_recall,      # rows-only + RECALL FLOOR assert
-        "ann_recall_d256": _q_ann_recall_d256,  # rows-only + recall floor
-        "ann_pq_topk": _q_ann_pq,         # rows-only + PQ recall floor
-        "ann_lsh_topk": _q_ann_lsh,       # rows-only + top-k row contract
-        "ann_ivf_topk": _q_ann_ivf,       # rows-only + top-k row contract
         "tile_captions": _q_tile_captions,
         "tile_stats": _q_tile_stats,
         "exact_dedup": _q_exact_dedup,
         "simhash": _q_simhash,
-        "ann_topk": _q_ann_topk,
-        "ann_cosine_topk": _q_ann_cosine,    # rows-only (float ranking)
-        # --- beyond the 50-row window: r4-recorded multi-green --------
-        "clean_corpus": _q_clean_corpus,
         "phash_near_dups": _q_phash_near_dups,
         "stream_window_counts": _q_stream_window_counts,
         "stream_join": _q_stream_join,
         "stream_sessions": _q_stream_sessions,
         "cell_hulls": _q_cell_hulls,      # rows-only + invariant asserts
         "cell_ring": _q_cell_ring,
-        "emb_near_dup": _q_emb_near_dup,
         "distance_to_zone": _q_distance_to_zone,
         "user_sessions": _q_user_sessions,
-        "knn_batch": _q_knn_batch,
+        "knn_batch": _q_knn_batch,                   # position 50
+        # --- beyond the 50-row window ---------------------------------
         "near_pairs": _q_near_pairs,
         "asof_views": _q_asof_views,
         "hot_cells": _q_hot_cells,
@@ -1529,7 +1296,6 @@ def oracle_sql() -> dict[str, str]:
         "simhash_near_dups": _dedup().simhash_near_dups_sql(),
         "minhash_lsh_pairs": _dedup().minhash_lsh_pairs_sql(50),
         "ngram_jaccard_pairs": _dedup().ngram_jaccard_pairs_sql(50),
-        "ann_topk": _ann().brute_topk_sql(ANN_QIDS, 10),
         "goql_filter": """
             SELECT doc_id FROM documents
             WHERE lang IN ('en', 'fr') AND TRY_CAST(n_chars AS DOUBLE) > 300""",
@@ -1610,8 +1376,6 @@ def oracle_sql() -> dict[str, str]:
     out["cell_ring"] = f"""{pc}
         SELECT cell_id, COUNT(*) AS n FROM pts
         WHERE cell_id IN ({ring_cells}) GROUP BY cell_id"""
-    dexpr = ("CAST(round(CAST(x[1] AS DOUBLE) * 1000) AS BIGINT)"
-             " - CAST(round(CAST(x[2] AS DOUBLE) * 1000) AS BIGINT)")
     knnb = " UNION ALL ".join(
         f"SELECT '{q}' AS qid, image_id, "
         f"(x - {qx}) * (x - {qx}) + (y - {qy}) * (y - {qy}) AS sq_dist "
@@ -1635,13 +1399,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT user_id, CAST(SUM(new_sess) AS BIGINT) AS n_sessions,
                COUNT(*) AS n_events
         FROM marked GROUP BY user_id"""
-    out["emb_near_dup"] = f"""
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               CAST(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                    x -> ({dexpr}) * ({dexpr}))) AS BIGINT) AS d2
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE CAST(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                    x -> ({dexpr}) * ({dexpr}))) AS BIGINT) <= {EMB_NEAR_D2}"""
     # watermark mirror (window-granular lateness): epoch-2 rows are kept
     # iff their window was still open at the epoch-1 watermark 88, i.e.
     # window end = (s//60)*60+60 > 88 <=> s >= 60; emitted windows = end
@@ -1658,8 +1415,6 @@ def oracle_sql() -> dict[str, str]:
                COUNT(*) AS n
         FROM kept WHERE (s // 60) * 60 + 60 <= 149
         GROUP BY 1, 2"""
-    from libgeodesk_spark.operators.pipeline import clean_corpus_sql
-    out["clean_corpus"] = clean_corpus_sql()
     out["stream_join"] = """
         SELECT p.event_id AS p_id, p.user_id, v.event_id AS v_id
         FROM (SELECT event_id, user_id, ts FROM events
@@ -1776,8 +1531,3 @@ def _textops():
 def _dedup():
     from libgeodesk_spark.operators import dedup
     return dedup
-
-
-def _ann():
-    from libgeodesk_spark.operators import ann
-    return ann

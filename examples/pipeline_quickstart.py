@@ -7,9 +7,9 @@ Run:  python examples/pipeline_quickstart.py
 Flow (each stage is a named operator with its own correctness gate):
   1. snapshot-commit the image table (sources/catalog.SnapshotTable)
   2. visual near-dup pairs by perceptual hash (dedup.phash_near_dups)
-  3. document quality gate + dedup + embedding attach (pipeline.clean_corpus)
-  4. ANN top-k over the kept embeddings (ann.lsh_bucket_topk)
-  5. manifest-pruned time-travel scan back over the snapshot
+  3. manifest-pruned time-travel scan back over the snapshot
+  4. streaming ingest into the snapshot table, exactly-once
+  5. recursive relation walk with per-root geometry
 """
 
 import os
@@ -21,8 +21,6 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from pyspark.sql import functions as F
 
 from libgeodesk_spark.api import Features
-from libgeodesk_spark.operators.ann import lsh_bucket_topk
-from libgeodesk_spark.operators.pipeline import clean_corpus
 from libgeodesk_spark.session import build_session
 from libgeodesk_spark.sources.points import derived_points
 
@@ -44,19 +42,7 @@ def main():
     dups = world.near_dups_by_phash(max_hamming=3)
     print(f"phash near-dup pairs: {dups.count()}")
 
-    # 3. document corpus: quality gate -> dedup -> embedding attach
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    corpus = clean_corpus(docs, emb)
-    kept = corpus.count()
-    print(f"clean corpus: {kept}/{docs.count()} documents kept")
-
-    # 4. ANN neighbors of the first 3 kept docs (multiprobe LSH)
-    qids = [r.doc_id for r in corpus.orderBy("doc_id").limit(3).collect()]
-    nn = lsh_bucket_topk(emb, qids, k=5)
-    print(f"ANN neighbors (k=5 x {len(qids)} queries): {nn.count()} rows")
-
-    # 5. time-travel + manifest pruning over the snapshot
+    # 3. time-travel + manifest pruning over the snapshot
     from libgeodesk_spark.sources.catalog import SnapshotTable
     tbl = SnapshotTable(f"{base}/images")
     lo = pts.agg(F.min("cell_id")).first()[0]
@@ -64,7 +50,7 @@ def main():
                                  snapshot_id=v)
     print(f"pruned scan: {sub.count()} rows, plan={plan}")
 
-    # 6. streaming ingest INTO the snapshot table, exactly-once across
+    # 4. streaming ingest INTO the snapshot table, exactly-once across
     #    restarts (epoch tags in the manifest — Iceberg streaming-sink
     #    semantics): late-arriving images land as new atomic snapshots
     from libgeodesk_spark.streaming.ingest import stream_to_snapshot
@@ -79,7 +65,7 @@ def main():
     print(f"streamed snapshot: "
           f"{SnapshotTable(f'{base}/late_tbl').read(spark).count()} rows")
 
-    # 7. recursive relation walk (superrelation-style membership),
+    # 5. recursive relation walk (superrelation-style membership),
     #    cycle-guarded, with per-root geometry through the closure
     from libgeodesk_spark.operators.topology import (
         members_recursive, relation_length_recursive)

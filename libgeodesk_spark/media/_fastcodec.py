@@ -472,8 +472,10 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
 
 
 def _self_test(lib: ctypes.CDLL) -> bool:
-    """C output must be byte-identical to the pure path on a probe image;
-    in particular the dlopened zlib must behave exactly like CPython's."""
+    """C output must be byte-identical to the pure path on a probe image,
+    both ways: each C encode equals the pure encode, and each C decode
+    of those bytes equals the pure decode. In particular the dlopened
+    zlib must behave exactly like CPython's."""
     import zlib
 
     import numpy as np
@@ -486,16 +488,31 @@ def _self_test(lib: ctypes.CDLL) -> bool:
     tmp = np.empty(4 * px.size + 4096, dtype=np.uint8)
     out = np.empty(2 * px.size + 4096, dtype=np.uint8)
     pp, tp, op = px.ctypes.data, tmp.ctypes.data, out.ctypes.data
-    ln = lib.png_encode(pp, 17, 33, tp, op, out.size)
-    if ln <= 0 or out[:ln].tobytes() != codec.encode_png(px):
+
+    def round_trip(ln, blob, pure_decode, c_decode, *tail) -> bool:
+        if ln <= 0 or out[:ln].tobytes() != blob:
+            return False
+        got = np.zeros_like(px)
+        return (c_decode(blob, len(blob), got.ctypes.data, got.size,
+                         *tail) == 0
+                and np.array_equal(got, pure_decode(blob)))
+
+    png = codec.encode_png(px)
+    meta = np.zeros(3, dtype=np.uint32)
+    if (lib.png_head(png, len(png), meta.ctypes.data) != 0
+            or meta.tolist() != [17, 33, 2]):
         return False
-    ln = lib.fjpg_encode(pp, 17, 33, tp, op, out.size)
-    if ln <= 0 or out[:ln].tobytes() != codec._encode_fjpg_pure(px):
+    if not round_trip(lib.png_encode(pp, 17, 33, tp, op, out.size), png,
+                      codec.decode_png, lib.png_decode_f0, tp, tmp.size):
         return False
-    ln = lib.bmp_encode(pp, 17, 33, op, out.size)
-    if ln <= 0 or out[:ln].tobytes() != codec.encode_bmp(px):
+    if not round_trip(lib.fjpg_encode(pp, 17, 33, tp, op, out.size),
+                      codec._encode_fjpg_pure(px),
+                      lambda b: codec._decode_fjpg_pure(b, 17, 33),
+                      lib.fjpg_decode):
         return False
-    return True
+    return round_trip(lib.bmp_encode(pp, 17, 33, op, out.size),
+                      codec.encode_bmp(px), codec.decode_bmp,
+                      lib.bmp_decode, meta.ctypes.data)
 
 
 _lib: ctypes.CDLL | bool | None = None

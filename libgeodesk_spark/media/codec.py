@@ -362,6 +362,11 @@ def _encode_fjpg_pure(u8: np.ndarray) -> bytes:
             + zlib.compress(quant, 6))
 
 
+def _decode_fjpg_pure(data: bytes, w: int, h: int) -> np.ndarray:
+    raw = _inflate(bytes(data[9:]), w * h * 3, "FJPG")
+    return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
+
+
 def encode(pixels: np.ndarray, fmt: str) -> bytes:
     h, w = pixels.shape[:2]
     u8 = np.ascontiguousarray(pixels, dtype=np.uint8)
@@ -439,8 +444,7 @@ def decode(data: bytes) -> tuple[np.ndarray, str]:
             if lib.fjpg_decode(data, len(data), px.ctypes.data,
                                px.size) == 0:
                 return px, "jpeg"
-        raw = _inflate(bytes(data[9:]), w * h * 3, "FJPG")
-        return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3), "jpeg"
+        return _decode_fjpg_pure(data, w, h), "jpeg"
     raise ValueError(f"bad magic {magic!r}")
 
 

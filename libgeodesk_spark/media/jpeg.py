@@ -242,11 +242,18 @@ class _BitReader:
                 if nxt == 0x00:
                     self.pos += 1            # stuffed 0xFF data byte
                 else:
-                    # 0xFF fill bytes may pad before a marker (T.81
-                    # B.1.1.2): consume the run; the first non-0xFF byte
-                    # is the marker code (ADVICE r5)
-                    while nxt == 0xFF and self.pos + 1 < len(self.data):
-                        self.pos += 1
+                    if nxt == 0xFF:
+                        # 0xFF fill bytes may pad before a marker (T.81
+                        # B.1.1.2): consume the run; a marker code must
+                        # follow it
+                        while (self.pos < len(self.data)
+                               and self.data[self.pos] == 0xFF):
+                            self.pos += 1
+                        if (self.pos >= len(self.data)
+                                or self.data[self.pos] == 0x00):
+                            raise ValueError(
+                                "JPEG: 0xFF fill bytes not followed by a "
+                                "marker")
                         nxt = self.data[self.pos]
                     self.pos += 1
                     self.marker = nxt        # real marker ends the segment

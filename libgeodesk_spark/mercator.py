@@ -195,31 +195,3 @@ def cells_covering_box(min_x: int, min_y: int, max_x: int, max_y: int,
     rows = np.arange(r0, r1 + 1, dtype=np.int64)
     cc, rr = np.meshgrid(cols, rows)
     return cell_from_col_row(cc.ravel(), rr.ravel(), zoom)
-
-
-# ---------------------------------------------------------------------------
-# Hilbert curve key (write-layout clustering; reference
-# HilbertTreeBuilder.cpp:47-120 uses the same d2xy-style curve for R-tree
-# packing — we reuse it to order rows inside cell partitions).
-# ---------------------------------------------------------------------------
-
-def hilbert_d(x: np.ndarray, y: np.ndarray, order: int = 16) -> np.ndarray:
-    """Vectorized xy → Hilbert curve distance for a 2^order × 2^order grid."""
-    x = np.asarray(x, dtype=np.int64).copy()
-    y = np.asarray(y, dtype=np.int64).copy()
-    rx = np.zeros_like(x)
-    ry = np.zeros_like(y)
-    d = np.zeros_like(x)
-    s = np.int64(1) << (order - 1)
-    while s > 0:
-        rx = ((x & s) > 0).astype(np.int64)
-        ry = ((y & s) > 0).astype(np.int64)
-        d += s * s * ((3 * rx) ^ ry)
-        # rotate
-        swap = ry == 0
-        flip = swap & (rx == 1)
-        x_f = np.where(flip, s - 1 - x, x)
-        y_f = np.where(flip, s - 1 - y, y)
-        x, y = np.where(swap, y_f, x_f), np.where(swap, x_f, y_f)
-        s >>= 1
-    return d

@@ -53,52 +53,6 @@ def morton_key(x, y, bits: int = MORTON_BITS):
     return key
 
 
-def hilbert_d_np(x: "np.ndarray", y: "np.ndarray",
-                 bits: int = MORTON_BITS) -> "np.ndarray":
-    """Vectorized Hilbert index (xy2d) over the top ``bits`` of each
-    offset-shifted int32 axis — the reference's ACTUAL packing curve
-    (tile/TileCatalog layout orders tiles along a Hilbert walk;
-    Morton/Z-order is this repo's JVM-pure default). Standard rotation
-    recurrence, numpy over the whole batch; one pass per level."""
-    import numpy as np
-    hx = ((x.astype(np.int64) + (1 << 31)) >> (32 - bits)).astype(np.int64)
-    hy = ((y.astype(np.int64) + (1 << 31)) >> (32 - bits)).astype(np.int64)
-    d = np.zeros(len(hx), dtype=np.int64)
-    s = np.int64(1 << (bits - 1))
-    while s > 0:
-        rx = ((hx & s) > 0).astype(np.int64)
-        ry = ((hy & s) > 0).astype(np.int64)
-        d += s * s * ((3 * rx) ^ ry)
-        # rotate quadrant: ry==0 swaps axes, with a flip when rx==1
-        flip = (ry == 0) & (rx == 1)
-        hx_f = np.where(flip, s - 1 - hx, hx)
-        hy_f = np.where(flip, s - 1 - hy, hy)
-        swap = ry == 0
-        hx, hy = (np.where(swap, hy_f, hx_f).astype(np.int64),
-                  np.where(swap, hx_f, hy_f).astype(np.int64))
-        s >>= 1
-    return d
-
-
-def hilbert_key_udf(bits: int = MORTON_BITS):
-    """Arrow-batched Hilbert key column. Why a pandas_udf and not pure
-    Column math like :func:`morton_key`: the xy2d rotation makes level
-    i's coordinates depend on ALL previous levels, so an unrolled
-    Column expression doubles per level (2^bits terms — janino's 64 KB
-    limit at bits≈16; see LSH_JVM_MAX_TERMS for the same wall), while
-    intermediate projections get re-inlined by CollapseProject. The
-    Arrow batch pays once per WRITE (clustering is write-amortized),
-    not per query."""
-    from pyspark.sql.functions import pandas_udf
-
-    def _hk(x, y):
-        import numpy as np
-        import pandas as pd
-        return pd.Series(hilbert_d_np(x.to_numpy(np.int64),
-                                      y.to_numpy(np.int64), bits))
-    return pandas_udf(_hk, "long")
-
-
 def morton_key_sql(x: str = "x", y: str = "y", bits: int = MORTON_BITS) -> str:
     terms = []
     for b in range(bits):
@@ -113,8 +67,7 @@ def write_gol_layout(df: DataFrame, path: str,
                      zoom: int = mercator.MAX_ZOOM,
                      bloom_cols: tuple[str, ...] = ("image_id",),
                      category_cols: tuple[str, ...] = (),
-                     n_files: int | None = None,
-                     curve: str = "morton") -> None:
+                     n_files: int | None = None) -> None:
     """Write ``df`` (must carry x, y, cell_id) cell-partitioned and
     Z-order-clustered.
 
@@ -143,15 +96,9 @@ def write_gol_layout(df: DataFrame, path: str,
     spark = df.sparkSession
     if n_files is None:
         n_files = spark.sparkContext.defaultParallelism * 4
-    if curve == "morton":        # JVM-pure default
-        zk = morton_key(F.col("x"), F.col("y"))
-    elif curve == "hilbert":     # the reference's packing curve; one
-        zk = hilbert_key_udf()(F.col("x"), F.col("y"))  # Arrow pass/write
-    else:
-        raise ValueError(f"curve must be morton|hilbert, got {curve!r}")
     out = df.withColumn(
         "part_cell", cell_zoomed_out(F.col("cell_id"), part_zoom, zoom)) \
-        .withColumn("_z", zk)
+        .withColumn("_z", morton_key(F.col("x"), F.col("y")))
     cats = [c for c in category_cols if c in df.columns]
     w = (out.repartitionByRange(n_files, "part_cell", *cats, "_z")
          .sortWithinPartitions("part_cell", *cats, "_z")

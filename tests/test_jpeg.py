@@ -407,6 +407,17 @@ class TestRestartAndErrors:
         with pytest.raises((ValueError, struct.error)):
             jpeg.decode_jpeg(blob[:40])     # cut inside a header segment
 
+    @pytest.mark.parametrize("tail", [b"\xff\xff\x00\xff\xd9", b"\xff\xff"],
+                             ids=["zero_byte", "end_of_data"])
+    def test_fill_run_without_marker_raises(self, tail):
+        """0xFF fill bytes may only pad before a marker (T.81 B.1.1.2).
+        A run followed by 0x00 or by the end of the data has no marker
+        and must not end the scan with 1-bit padding."""
+        blob = jpeg.encode_jpeg(codec.synth_pixels(5, 32, 32), 90)
+        end = blob.rindex(b"\xff\xd9")
+        with pytest.raises(ValueError, match="fill bytes"):
+            jpeg.decode_jpeg(blob[:end] + tail)
+
     def test_not_a_jpeg(self):
         with pytest.raises(ValueError):
             jpeg.decode_jpeg(b"\x89PNG\r\n\x1a\n")

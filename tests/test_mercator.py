@@ -137,17 +137,6 @@ def test_cells_covering_box():
     assert len(cover2) == 2 and c in set(map(int, cover2))
 
 
-def test_hilbert_locality():
-    d = M.hilbert_d(np.array([0, 0, 1, 1]), np.array([0, 1, 1, 0]), order=1)
-    assert sorted(d) == [0, 1, 2, 3]
-    # distinct cells map to distinct keys on a small grid
-    g = 32
-    xs, ys = np.meshgrid(np.arange(g), np.arange(g))
-    d = M.hilbert_d(xs.ravel(), ys.ravel(), order=5)
-    assert len(set(d.tolist())) == g * g
-    assert d.min() == 0 and d.max() == g * g - 1
-
-
 class TestLengthUnits:
     def test_aliases_and_reference_factors(self):
         """LengthUnit surface: every alias of LengthUnit_attr.txt

@@ -2,7 +2,7 @@
 
 Each ``__spark_entry__.queries()`` entry is built at sf0.001 and its
 physical plan is read without running the query. (Building some entries
-runs jobs of its own: kNN rounds, ANN training, streaming epochs.) The
+runs jobs of its own: kNN rounds, streaming epochs.) The
 engine is fast only while its plans keep this shape:
 
 * no SortMergeJoin, no CartesianProduct and no row-at-a-time Python
@@ -12,15 +12,12 @@ engine is fast only while its plans keep this shape:
   counts when it was written;
 * the positive shape in ``SHAPES`` for the queries that have one.
 
-The sf0.001 plan is not the plan at scale. Ten queries join sides small
-enough to broadcast by size estimate alone, so with
+The sf0.001 plan is not the plan at scale. Eight queries join sides
+small enough to broadcast by size estimate alone, so with
 ``spark.sql.autoBroadcastJoinThreshold=-1`` their plans carry a
 SortMergeJoin: simhash_near_dups, minhash_lsh_pairs, ngram_jaccard_pairs,
-nodes_of, crossing_segments, ann_lsh_topk, clean_corpus, phash_near_dups,
-near_pairs and tile_metrics (its persisted gate join). The IVF-PQ
-shortlist fetch is the one join pinned at scale: it broadcasts by hint,
-which ``test_ivfpq_fetch_broadcasts_without_size_estimate`` checks with
-auto-broadcast off.
+nodes_of, crossing_segments, phash_near_dups, near_pairs and tile_metrics
+(its persisted gate join).
 """
 
 import re
@@ -38,25 +35,23 @@ _EXCHANGE = re.compile(r"(?m)^[\s|:+\-]*Exchange\b")
 
 MAX_EXCHANGES = {
     **dict.fromkeys([
-        "ann_recall", "ann_recall_d256", "emb_near_dup", "goql_filter",
-        "goql_tags", "knn_batch", "knn_join", "knn_k5", "knn_k50",
-        "rel_members_recursive", "snapshot_evolved", "snapshot_scan",
-        "stream_dedup", "stream_join", "stream_sessions",
+        "goql_filter", "goql_tags", "knn_batch", "knn_join", "knn_k5",
+        "knn_k50", "rel_members_recursive", "snapshot_evolved",
+        "snapshot_scan", "stream_dedup", "stream_join", "stream_sessions",
         "stream_snapshot", "stream_window_counts", "stream_within",
         "text_features"], 0),
     **dict.fromkeys([
-        "ann_cosine_topk", "ann_ivf_topk", "ann_topk", "asof_views",
-        "bbox_window", "cell_assign", "clean_corpus", "contains_point",
+        "asof_views", "bbox_window", "cell_assign", "contains_point",
         "distance_to_zone", "exact_dedup", "members_of",
         "orders_by_segment", "parents_of", "radius_500k", "simhash",
         "snapshot_within", "tpch_q1", "user_sessions", "zone_bbox",
         "zone_centroid", "zone_lambert_area", "zone_length",
         "zone_shoelace", "zorder_key"], 1),
     **dict.fromkeys([
-        "ann_lsh_topk", "cell_pyramid", "cell_ring", "colocated_grid",
-        "crossing_segments", "events_by_type", "hot_cells", "near_pairs",
-        "simhash_near_dups", "tile_captions", "tile_stats",
-        "way_distance", "way_intersects", "way_length", "way_within"], 2),
+        "cell_pyramid", "cell_ring", "colocated_grid", "crossing_segments",
+        "events_by_type", "hot_cells", "near_pairs", "simhash_near_dups",
+        "tile_captions", "tile_stats", "way_distance", "way_intersects",
+        "way_length", "way_within"], 2),
     **dict.fromkeys([
         "intersects_comb", "rel_intersects", "way_crossing", "within_comb",
         "within_convex", "within_holed"], 3),
@@ -64,8 +59,6 @@ MAX_EXCHANGES = {
     **dict.fromkeys(["phash_near_dups", "rel_within"], 5),
     "tile_mosaic": 6,
     "zoneprep_within": 7,
-    **dict.fromkeys(["ann_ivfpq_persisted", "ann_ivfpq_topk",
-                     "ann_pq_topk"], 8),
     "tile_metrics": 10,
     "minhash_lsh_pairs": 18,
     "ngram_jaccard_pairs": 19,
@@ -91,10 +84,6 @@ SHAPES = {
     "snapshot_scan": [(r"PushedFilters: \[[^\]]*GreaterThanOrEqual\(cell_id",
                        True)],
 }
-
-# the IVF-PQ shortlist has no size statistics, so only its broadcast
-# hint keeps the corpus-side fetch from becoming a SortMergeJoin
-IVFPQ_QUERIES = ("ann_ivfpq_topk", "ann_pq_topk", "ann_ivfpq_persisted")
 
 QUERIES = entry.queries()
 
@@ -127,24 +116,3 @@ def test_plan_invariants(built, name):
     assert len(_EXCHANGE.findall(plan)) <= MAX_EXCHANGES[name]
     for pattern, must in SHAPES.get(name, ()):
         assert bool(re.search(pattern, plan)) == must, pattern
-
-
-@pytest.mark.parametrize("name", IVFPQ_QUERIES)
-def test_ivfpq_fetch_broadcasts_without_size_estimate(spark, built, name):
-    """Past the auto-broadcast threshold (10⁶ vectors) the plan must still
-    hold no SortMergeJoin: plan the built query again with auto-broadcast
-    off. The gate queries persist their result, and a cached relation
-    keeps the plan it was built with, so the analyzed plan is optimized
-    and planned afresh with the cache left out."""
-    analyzed = built(name)._jdf.queryExecution().analyzed()
-    state = spark._jsparkSession.sessionState()
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        optimized = state.optimizer().execute(analyzed)
-        plan = state.planner().plan(optimized).next().toString()
-    finally:
-        spark.conf.set(key, old)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan

@@ -248,6 +248,31 @@ class TestFastcodecKernel:
         os.chmod(planted, 0o755)        # same file, owner-only writable
         assert self._fresh_load(monkeypatch, shared) is not None
 
+    def test_self_test_rejects_a_wrong_decoder(self, tmp_path, monkeypatch):
+        """A kernel whose encoders are right but whose FJPG decoder flips
+        one output byte must not be trusted."""
+        import ctypes
+
+        from libgeodesk_spark.media import _fastcodec
+        lib = self._fresh_load(monkeypatch, tmp_path)
+        assert lib is not None
+
+        class Proxy:
+            def __init__(self, flip):
+                self.flip = flip
+
+            def __getattr__(self, name):
+                return getattr(lib, name)
+
+            def fjpg_decode(self, blob, n, pix, cap):
+                rc = lib.fjpg_decode(blob, n, pix, cap)
+                if self.flip:
+                    ctypes.c_uint8.from_address(pix).value ^= 1
+                return rc
+
+        assert _fastcodec._self_test(Proxy(flip=False))
+        assert not _fastcodec._self_test(Proxy(flip=True))
+
     def test_default_cache_is_private_per_user(self, tmp_path, monkeypatch):
         import os
         import tempfile

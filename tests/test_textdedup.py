@@ -1,4 +1,4 @@
-"""Text / dedup / ANN operators: Spark engine vs DuckDB mirror (mini gate).
+"""Text / dedup operators: Spark engine vs DuckDB mirror (mini gate).
 
 These run the same paired implementations the driver's correctness gate
 uses, at sf0.001, and require exact multiset equality.
@@ -11,7 +11,7 @@ import pytest
 @pytest.fixture(scope="module")
 def con(sf_dir):
     c = duckdb.connect()
-    for t in ("documents", "embeddings", "lineitem"):
+    for t in ("documents", "lineitem"):
         c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return c
 
@@ -43,11 +43,6 @@ def assert_same(spark_df, con, sql):
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-@pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 class TestText:
@@ -181,223 +176,6 @@ class TestDedup:
         # b vs c: differ in bits {0(no: b flips 0, c flips 0 and 2)} ->
         # xor = 0b100, hamming 1 — also a valid near-dup pair
         assert ("b", "c", 1) in got
-
-
-class TestAnn:
-    QIDS = [0, 1, 2, 3, 4]
-
-    def test_brute_topk(self, emb, con):
-        from libgeodesk_spark.operators.ann import brute_topk, brute_topk_sql
-        assert_same(brute_topk(emb, self.QIDS, 10), con,
-                    brute_topk_sql(self.QIDS, 10))
-
-    def test_lsh_recall(self, emb):
-        from libgeodesk_spark.operators.ann import brute_topk, lsh_bucket_topk
-        exact = brute_topk(emb, self.QIDS, 5).toPandas()
-        approx = lsh_bucket_topk(emb, self.QIDS, 5).toPandas()
-        # multiprobe LSH should recover a decent share of the true top-5
-        e = set(map(tuple, exact[["qid", "vec_id"]].values.tolist()))
-        a = set(map(tuple, approx[["qid", "vec_id"]].values.tolist()))
-        assert len(e & a) >= len(e) * 0.3
-
-    def test_ivf_recall(self, emb):
-        from libgeodesk_spark.operators.ann import brute_topk, ivf_topk
-        exact = brute_topk(emb, self.QIDS, 5).toPandas()
-        approx = ivf_topk(emb, self.QIDS, 5).toPandas()
-        e = set(map(tuple, exact[["qid", "vec_id"]].values.tolist()))
-        a = set(map(tuple, approx[["qid", "vec_id"]].values.tolist()))
-        assert len(a) == len(e)
-        assert len(e & a) >= len(e) * 0.3
-
-    def test_cosine_topk_sane(self, emb):
-        from libgeodesk_spark.operators.ann import cosine_topk
-        pdf = cosine_topk(emb, [0], 5).toPandas()
-        assert len(pdf) == 5
-        assert (pdf.cos <= 1.0 + 1e-9).all()
-        assert pdf["rank"].tolist() == [1, 2, 3, 4, 5]
-
-    def test_distributed_trainer_matches_full_data_lloyd(self, emb):
-        """ivf_centroids_distributed over the whole table must agree with
-        a single-process numpy Lloyd on the same data, same init, same
-        tie-break — the distributed partial-sum reduction only changes
-        float summation order (hence allclose, not equality)."""
-        import numpy as np
-        from libgeodesk_spark.operators.ann import ivf_centroids_distributed
-        pdf = emb.orderBy("vec_id").toPandas()
-        x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        n_lists, iters = 8, 4
-        ref = x[:n_lists].copy()
-        for _ in range(iters):
-            d = ((x[:, None, :] - ref[None, :, :]) ** 2).sum(axis=2)
-            assign = d.argmin(axis=1)
-            for j in range(n_lists):
-                sel = x[assign == j]
-                if len(sel):
-                    ref[j] = sel.mean(axis=0)
-        got = ivf_centroids_distributed(emb, n_lists, iters=iters)
-        assert got.shape == ref.shape
-        assert np.allclose(got, ref, rtol=1e-9, atol=1e-9)
-
-    def test_ivf_with_distributed_centroids(self, emb):
-        from libgeodesk_spark.operators.ann import (
-            auto_lists, brute_topk, ivf_centroids_distributed, ivf_topk)
-        n = emb.count()
-        cents = ivf_centroids_distributed(emb, auto_lists(n), iters=3)
-        exact = brute_topk(emb, self.QIDS, 5).toPandas()
-        approx = ivf_topk(emb, self.QIDS, 5, nprobe=8,
-                          centroids=cents).toPandas()
-        e = set(map(tuple, exact[["qid", "vec_id"]].values.tolist()))
-        a = set(map(tuple, approx[["qid", "vec_id"]].values.tolist()))
-        assert len(a) == len(e)
-        assert len(e & a) >= len(e) * 0.3
-
-    def test_auto_lists_sizing(self):
-        from libgeodesk_spark.operators.ann import auto_lists
-        assert auto_lists(100) == 16          # floor
-        assert auto_lists(1_000_000) == 1000  # sqrt(N)
-        assert auto_lists(10**9) == 31623     # ~sqrt(1e9), under the 32k cap
-        assert auto_lists(10**12) == 1 << 15  # default cap
-        assert auto_lists(10**9, max_lists=4096) == 4096  # explicit bound
-
-    def test_lsh_tagged_arrow_matches_jvm(self, spark):
-        """The Arrow (numpy matmul) signature path must produce bucket-
-        identical signatures to the JVM expression path — same planes,
-        same biases, any dim. Forced by monkeying the dispatch threshold."""
-        import numpy as np
-
-        from libgeodesk_spark.operators import ann
-        from libgeodesk_spark.operators.ann import (
-            lsh_biases, lsh_tagged, synth_embeddings)
-        emb = synth_embeddings(spark, 300, 32)
-        b = lsh_biases(emb, 32, 8)
-        jvm = lsh_tagged(emb, 32, 8, b).select("vec_id", "bucket").toPandas()
-        old = ann.LSH_JVM_MAX_TERMS
-        try:
-            ann.LSH_JVM_MAX_TERMS = 0          # force the Arrow path
-            arrow = lsh_tagged(emb, 32, 8, b) \
-                .select("vec_id", "bucket").toPandas()
-        finally:
-            ann.LSH_JVM_MAX_TERMS = old
-        j = jvm.sort_values("vec_id").reset_index(drop=True)
-        a = arrow.sort_values("vec_id").reset_index(drop=True)
-        assert (j["bucket"].to_numpy() == a["bucket"].to_numpy()).all()
-        assert len(np.unique(j["bucket"])) > 1
-
-    def test_synth_embeddings_deterministic(self, spark):
-        from libgeodesk_spark.operators.ann import synth_embeddings
-        a = synth_embeddings(spark, 100, 16).orderBy("vec_id").toPandas()
-        b = synth_embeddings(spark.range(0).sparkSession, 100, 16) \
-            .repartition(7).orderBy("vec_id").toPandas()
-        import numpy as np
-        assert np.array_equal(np.stack(a["embedding"].to_numpy()),
-                              np.stack(b["embedding"].to_numpy()))
-
-    def test_recall_dim256(self, spark):
-        """High-dim evidence: at dim=256 the LSH path runs the Arrow
-        signature (256 x >=4 planes > LSH_JVM_MAX_TERMS threshold once
-        planes scale) and recall against brute force stays useful."""
-        from libgeodesk_spark.operators.ann import ann_recall, synth_embeddings
-        emb = synth_embeddings(spark, 1500, 256)
-        rec = {r["method"]: r["recall_pct"]
-               for r in ann_recall(emb, self.QIDS, 10, dim=256).collect()}
-        assert rec["lsh"] >= 70, rec
-        assert rec["ivf"] >= 70, rec
-
-
-class TestIvfPq:
-    def test_ivfpq_recall_and_shape(self, spark):
-        """The composed IVF+PQ path: recall@10 bounded below by the
-        probing recall (ivf ~94 at this corpus), full k rows per query,
-        schema identical to brute_topk."""
-        import __spark_entry__ as e
-        from libgeodesk_spark.operators.ann import brute_topk, ivfpq_topk
-        emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-        exact = {(r["qid"], r["vec_id"])
-                 for r in brute_topk(emb, e.ANN_QIDS, 10).collect()}
-        out = ivfpq_topk(emb, e.ANN_QIDS, 10, nprobe=8, shortlist=64)
-        rows = out.collect()
-        assert len(rows) == len(e.ANN_QIDS) * 10
-        assert set(out.columns) == {"qid", "vec_id", "d2", "rank"}
-        got = {(r["qid"], r["vec_id"]) for r in rows}
-        recall = 100 * len(got & exact) / len(exact)
-        assert recall >= 85, recall
-
-    def test_quantizer_save_load_bit_exact(self, spark, tmp_path):
-        """Quantizer persistence (VERDICT r4 #3): IVF centroids, PQ
-        codebooks, LSH planes+biases round-trip through the parquet
-        artifact BIT-exactly, and an IVF+PQ answer built from the
-        reloaded arrays equals the one from the in-memory arrays
-        row-for-row."""
-        import numpy as np
-
-        from libgeodesk_spark.operators.ann import (
-            ivf_centroids, ivfpq_topk, load_quantizer, lsh_plane_matrix,
-            pq_train, save_quantizer)
-        import __spark_entry__ as e
-        emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-        cents = ivf_centroids(emb, 32)
-        books = pq_train(emb, iters=2)
-        planes = lsh_plane_matrix(16, 64)
-        biases = np.linspace(-0.5, 0.5, 16)
-        path = str(tmp_path / "q")
-        save_quantizer(spark, path, centroids=cents, codebooks=books,
-                       planes=planes, biases=biases,
-                       meta={"dim": 64, "n_lists": 32})
-        q = load_quantizer(spark, path)
-        for name, want in (("centroids", cents), ("codebooks", books),
-                           ("planes", planes), ("biases", biases)):
-            assert q[name].dtype == np.float64
-            assert np.array_equal(q[name], want), name
-        assert q["meta"] == {"dim": 64, "n_lists": 32}
-        a = sorted(map(tuple, ivfpq_topk(
-            emb, e.ANN_QIDS[:4], 5, n_lists=32, nprobe=8, shortlist=64,
-            centroids=cents, codebooks=books).collect()))
-        b = sorted(map(tuple, ivfpq_topk(
-            emb, e.ANN_QIDS[:4], 5, n_lists=32, nprobe=8, shortlist=64,
-            centroids=q["centroids"], codebooks=q["codebooks"])
-            .collect()))
-        assert a == b and len(a) == 20
-
-
-class TestPipeline:
-    def test_clean_corpus(self, docs, emb, con):
-        from libgeodesk_spark.operators.pipeline import (
-            clean_corpus, clean_corpus_sql)
-        assert_same(clean_corpus(docs, emb), con, clean_corpus_sql())
-
-    def test_clean_corpus_dedup_keeps_first(self, spark):
-        from libgeodesk_spark.operators.pipeline import clean_corpus
-        text = "the quick brown fox jumps over the lazy dog " * 5
-        docs = spark.createDataFrame(
-            [(0, text), (1, text), (2, text + "unique tail")],
-            "doc_id long, text string")
-        emb = spark.createDataFrame(
-            [(i, [0.5] * 4) for i in range(3)],
-            "vec_id long, embedding array<float>")
-        got = sorted(r.doc_id for r in clean_corpus(docs, emb).collect())
-        assert got == [0, 2]   # doc 1 is an exact dup of doc 0
-
-    def test_pq_adc_recall(self, emb):
-        """PQ8x8 ADC top-k recovers most of the exact top-5 (32x memory
-        compression path); codes are valid codeword indices."""
-        import numpy as np
-        from libgeodesk_spark.operators.ann import (
-            brute_topk, pq_encode, pq_train)
-        books = pq_train(emb, iters=3)
-        m, ksub, dsub = books.shape
-        assert (m, dsub) == (8, 8)
-        codes = pq_encode(emb, books)
-        pdf = codes.select("vec_id", "codes").toPandas()
-        arr = np.array(pdf.codes.tolist())
-        assert arr.shape[1] == m and arr.min() >= 0 and arr.max() < ksub
-        from libgeodesk_spark.operators.ann import pq_topk_rerank
-        approx = pq_topk_rerank(emb, codes, books, [0, 1, 2, 3, 4], 5,
-                                shortlist=64).toPandas()
-        exact = brute_topk(emb, [0, 1, 2, 3, 4], 5).toPandas()
-        e = set(map(tuple, exact[["qid", "vec_id"]].values.tolist()))
-        a = set(map(tuple, approx[["qid", "vec_id"]].values.tolist()))
-        assert len(a) == len(e)
-        assert len(e & a) >= len(e) * 0.5
 
 
 def test_phash_banded_matches_brute_hamming(spark):

@@ -74,82 +74,6 @@ def test_morton_matches_numpy(spark):
     assert len(set(want.tolist())) > 1900
 
 
-def _xy2d_scalar(order: int, x: int, y: int) -> int:
-    """Independent textbook Hilbert xy2d (scalar, per Wikipedia's
-    'Hilbert curve' C routine) — the oracle for the vectorized kernel."""
-    d = 0
-    s = order // 2
-    while s > 0:
-        rx = 1 if (x & s) > 0 else 0
-        ry = 1 if (y & s) > 0 else 0
-        d += s * s * ((3 * rx) ^ ry)
-        if ry == 0:
-            if rx == 1:
-                x = s - 1 - x
-                y = s - 1 - y
-            x, y = y, x
-        s //= 2
-    return d
-
-
-def test_hilbert_matches_scalar_reference(spark):
-    from libgeodesk_spark.sources.writer import hilbert_d_np
-    rng = np.random.default_rng(6)
-    xs = rng.integers(-2**31, 2**31 - 1, 1500)
-    ys = rng.integers(-2**31, 2**31 - 1, 1500)
-    got = hilbert_d_np(xs, ys, bits=16)
-    for i in range(0, 1500, 37):
-        hx = int((int(xs[i]) + 2**31) >> 16)
-        hy = int((int(ys[i]) + 2**31) >> 16)
-        assert got[i] == _xy2d_scalar(1 << 16, hx, hy), i
-
-
-def test_hilbert_is_a_true_space_filling_walk():
-    """The DEFINING property Morton lacks: walking cells in key order
-    moves exactly ONE grid step each time (no jumps) and visits every
-    cell exactly once. Verified exhaustively on the full 32x32 grid."""
-    from libgeodesk_spark.sources.writer import hilbert_d_np
-    bits = 5
-    n = 1 << bits
-    cc, rr = np.meshgrid(np.arange(n), np.arange(n))
-    cc, rr = cc.ravel(), rr.ravel()
-    # map grid coords into the int32 domain the kernel expects
-    xs = (cc.astype(np.int64) << (32 - bits)) - 2**31
-    ys = (rr.astype(np.int64) << (32 - bits)) - 2**31
-    d = hilbert_d_np(xs, ys, bits=bits)
-    assert sorted(d.tolist()) == list(range(n * n))   # a permutation
-    order = np.argsort(d)
-    dx = np.abs(np.diff(cc[order]))
-    dy = np.abs(np.diff(rr[order]))
-    assert ((dx + dy) == 1).all()                     # unit steps only
-    # Morton on the same grid DOES jump (what Hilbert buys)
-    mz = np.zeros(len(cc), dtype=np.int64)
-    for b in range(bits):
-        mz |= ((cc >> b) & 1) << (2 * b)
-        mz |= ((rr >> b) & 1) << (2 * b + 1)
-    mo = np.argsort(mz)
-    assert (np.abs(np.diff(cc[mo])) + np.abs(np.diff(rr[mo])) > 1).any()
-
-
-def test_hilbert_gol_layout_roundtrip(spark, sf_dir, tmp_path):
-    """curve='hilbert' writes the same rows (clustering changes layout,
-    never content) and window scans stay correct."""
-    from libgeodesk_spark.sources.points import derived_points
-    from libgeodesk_spark.sources.writer import (
-        read_gol_layout, scan_window, write_gol_layout)
-    pts = derived_points(spark, sf_dir)
-    path = str(tmp_path / "hilbert_gol")
-    write_gol_layout(pts, path, curve="hilbert")
-    back = read_gol_layout(spark, path)
-    assert back.count() == pts.count()
-    w = (90_000_000, 642_000_000, 94_000_000, 646_000_000)
-    got = sorted(r.image_id for r in scan_window(back, *w).collect())
-    want = sorted(r.image_id for r in pts.filter(
-        (F.col("x") >= w[0]) & (F.col("x") <= w[2])
-        & (F.col("y") >= w[1]) & (F.col("y") <= w[3])).collect())
-    assert got == want
-
-
 def test_bucketed_payload_reattach(spark, sf_dir, tmp_path):
     """Bytes re-attach via a bucket-local join: the payload side shows no
     Exchange in the physical plan (SURVEY §7.4 skinny-join discipline)."""
